@@ -91,7 +91,7 @@ def _hash_rows(rows, cols) -> str:
 
 
 class QueryOracle:
-    """DuckDB views over the operators fixture tables plus the oracle SQL."""
+    """DuckDB views over the operators tables plus the oracle SQL."""
 
     def __init__(self, sf_dir: str, oracles: dict[str, str]) -> None:
         self.con = duckdb.connect()

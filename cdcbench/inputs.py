@@ -1,172 +1,140 @@
-"""Benchmark inputs, made from the seed and cached per (workload, seed).
+"""Benchmark inputs.
 
-The change logs come from the engine's own generator
-(``tiflow_spark.sources.datagen.generate_change_events``), written once to a
-staging directory and then cut into epoch directories with pyarrow: every
-epoch holds exactly FILES_PER_EPOCH files, whatever the core count, and the
-feed's ``max_files_per_trigger`` equals that count, so one epoch is one
-microbatch on any machine. Epoch files get fixed, increasing modification
-times, the order in which the file-stream source admits them. Rows are
-sorted before they are written, so a seed always gives the same files.
+tail: change logs written by the engine's key-local writer
+(``tiflow_spark.sources.datagen.write_epoch_files_key_local``). It writes one
+file per epoch directory whatever the core count, so a feed with
+``max_files_per_trigger=1`` commits one epoch per microbatch on any machine.
+The logs are generated in a child process (``python3 -m cdcbench.inputs``)
+before the measuring SparkSession starts, so the JVM that is measured never
+runs a generation job. They are cached per (shape, seed, generator source).
 
-The operators fixtures (``events``, ``documents``, ``embeddings``) are
-drawn with numpy from the seed, in the schemas the bench queries read.
+operators: the fixed sf0.01 tables in ``cdcbench/data/sf0.01``, copied
+unchanged from the repository's read-only test data (the scale its DuckDB
+oracles are checked at). The seed only orders the queries in a pass.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import json
 import os
+import random
 import shutil
+import subprocess
+import sys
 import time
 
-import numpy as np
-import pyarrow as pa
-import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-# Bump when the shape of any input changes, so stale caches are not reused.
-CACHE_VERSION = 4
-MTIME_BASE = 1_700_000_000
+HERE = os.path.dirname(os.path.abspath(__file__))
+OPERATORS_DIR = os.path.join(HERE, "data", "sf0.01")
+OPERATORS_TABLES = ("events", "documents", "embeddings")
 
 # Change-log shapes: ``epochs`` is the number of microbatches a drain must
-# commit (a different count is a failed operation), each cut from one
-# contiguous conv-id range.
+# commit (a different count is a failed operation), each one contiguous
+# conv-id range.
 TAIL = dict(n_convs=1_500, epochs=6)
-# Throwaway two-epoch log drained during set-up; fixed, so it is made once
-# per cache.
+# Throwaway two-epoch log drained during set-up; fixed, so it is made once.
 WARMUP = dict(n_convs=200, epochs=2)
-# Files per epoch directory, and so the feed's max_files_per_trigger.
-FILES_PER_EPOCH = 1
 WARMUP_SEED = 7
-OPERATORS = dict(n_events=40_000, n_users=1_000, n_docs=1_000, n_vecs=600)
-
-VOCAB = (
-    "a agg batch big column customer data dup fast filter group hash join key "
-    "line merge order part query row scan slow small sort spark stream table "
-    "the value vector window"
-).split()
-LANGS = ["en", "zh", "de", "fr", "es"]
-LANG_P = [0.41, 0.15, 0.14, 0.15, 0.15]
-EVENT_TYPES = ["signup", "click", "error", "view", "purchase"]
-EMBED_DIM = 64
 
 
-def _epoch_ids(tab: pa.Table, shape: dict) -> np.ndarray:
-    """Key-local epochs: epoch k carries the whole lifecycle of the k-th
-    contiguous conv-id range (the shape of
-    ``datagen.write_epoch_files_key_local``)."""
-    group = -(-shape["n_convs"] // shape["epochs"])
-    conv_n = pc.cast(pc.utf8_slice_codeunits(tab.column("conv_id"), 1), pa.int64())
-    return conv_n.to_numpy() // group
+def _spec(shape: dict, seed: int):
+    from tiflow_spark.sources.datagen import GenSpec
+
+    return GenSpec(n_convs=shape["n_convs"], hot_turns=256, n_source_partitions=32, seed=seed)
 
 
-def write_change_log(spark, shape: dict, seed: int, out_dir: str) -> dict:
-    """Generate one change log and cut it into epoch directories under
-    ``out_dir``. Returns its metadata (events per epoch, glob, file count)."""
-    from tiflow_spark.sources.datagen import GenSpec, generate_change_events
+def _source_hash() -> str:
+    """Hash of the code that decides a log's content: the generator and
+    this file. A change to either makes new cache entries."""
+    import tiflow_spark.sources.datagen as datagen
 
-    spec = GenSpec(n_convs=shape["n_convs"], hot_turns=256, n_source_partitions=32, seed=seed)
-    staging = f"{out_dir}/_staging"
-    generate_change_events(spark, spec).write.mode("overwrite").parquet(staging)
-    tab = pq.read_table(staging)
-    shutil.rmtree(staging)
-    epoch = _epoch_ids(tab, shape)
-    sort_keys = [(c, "ascending") for c in ("conv_id", "turn_idx", "commit_ts", "start_ts", "op")]
+    h = hashlib.sha256()
+    for path in (datagen.__file__, __file__):
+        with open(path, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()[:12]
+
+
+def _entry(cache_root: str, shape: dict, seed: int) -> str:
+    return f"{cache_root}/{_source_hash()}-c{shape['n_convs']}-e{shape['epochs']}-s{seed}"
+
+
+def _write_log(spark, shape: dict, seed: int, entry: str) -> None:
+    """Child side: write one log under ``entry`` and its ``meta.json`` (last,
+    so an entry without it is incomplete and made again)."""
+    from tiflow_spark.sources.datagen import write_epoch_files_key_local
+
+    shutil.rmtree(entry, ignore_errors=True)
+    spec = _spec(shape, seed)
+    paths = write_epoch_files_key_local(spark, spec, f"{entry}/log", n_groups=shape["epochs"])
     per_epoch = []
-    for k in range(shape["epochs"]):
-        sub = tab.filter(pa.array(epoch == k)).sort_by(sort_keys)
-        if sub.num_rows < FILES_PER_EPOCH:
-            raise RuntimeError(f"epoch {k} has only {sub.num_rows} events")
-        d = f"{out_dir}/epoch_{k:04d}"
-        os.makedirs(d)
-        step = -(-sub.num_rows // FILES_PER_EPOCH)
-        for i in range(FILES_PER_EPOCH):
-            path = f"{d}/part-{i:05d}.parquet"
-            pq.write_table(sub.slice(i * step, step), path)
-            os.utime(path, (MTIME_BASE + k, MTIME_BASE + k))
-        per_epoch.append(sub.num_rows)
-    return {
-        "events_dir": f"{out_dir}/epoch_*",
+    for p in paths:
+        files = glob.glob(f"{p}/*.parquet")
+        if len(files) != 1:
+            raise RuntimeError(f"{p}: {len(files)} files, expected 1")
+        per_epoch.append(pq.read_metadata(files[0]).num_rows)
+    meta = {
+        "events_dir": f"{entry}/log/epoch_*",
         "events_per_epoch": per_epoch,
-        "events": int(sum(per_epoch)),
-        "files_per_epoch": FILES_PER_EPOCH,
+        "events": sum(per_epoch),
         "ddl_ts": spec.ddl_ts,
     }
-
-
-def _documents(rng: np.random.Generator, n_docs: int) -> pa.Table:
-    texts = []
-    for i in range(n_docs):
-        r = rng.random()
-        if i > 10 and r < 0.02:  # exact duplicate of an earlier document
-            texts.append(texts[int(rng.integers(0, i))])
-        elif i > 10 and r < 0.08:  # near duplicate: a few words swapped
-            words = texts[int(rng.integers(0, i))].split(" ")
-            for j in rng.integers(0, len(words), size=max(1, len(words) // 20)):
-                words[j] = VOCAB[int(rng.integers(0, len(VOCAB)))]
-            texts.append(" ".join(words))
-        else:
-            n = int(rng.integers(10, 101))
-            texts.append(" ".join(VOCAB[j] for j in rng.integers(0, len(VOCAB), size=n)))
-    return pa.table({
-        "doc_id": pa.array(np.arange(n_docs, dtype=np.int64)),
-        "text": pa.array(texts),
-        "lang": pa.array([LANGS[j] for j in rng.choice(len(LANGS), size=n_docs, p=LANG_P)]),
-        "source": pa.array([f"src{i % 20}" for i in range(n_docs)]),
-        "n_chars": pa.array(np.array([len(t) for t in texts], dtype=np.int64)),
-    })
-
-
-def write_operator_tables(shape: dict, seed: int, out_dir: str) -> dict:
-    rng = np.random.default_rng(seed)
-    n_ev = shape["n_events"]
-    secs = np.sort(rng.integers(0, 30 * 86_400 * 1_000_000, size=n_ev))
-    events = pa.table({
-        "event_id": pa.array(np.arange(n_ev, dtype=np.int64)),
-        "ts": pa.array(np.datetime64("2024-01-01") + secs.astype("timedelta64[us]")),
-        "user_id": pa.array(rng.integers(0, shape["n_users"], size=n_ev, dtype=np.int64)),
-        "event_type": pa.array([EVENT_TYPES[j] for j in rng.integers(0, 5, size=n_ev)]),
-        "value": pa.array(np.round(rng.exponential(60.0, size=n_ev), 2)),
-        "props": pa.array([f'{{"k": {j}}}' for j in rng.integers(0, 100, size=n_ev)]),
-    })
-    vecs = rng.standard_normal((shape["n_vecs"], EMBED_DIM)).astype(np.float32)
-    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
-    embeddings = pa.table({
-        "vec_id": pa.array(np.arange(shape["n_vecs"], dtype=np.int64)),
-        "embedding": pa.array(list(vecs), type=pa.list_(pa.float32())),
-        "label": pa.array(rng.integers(0, 10, size=shape["n_vecs"]).astype(np.int32)),
-    })
-    tables = {
-        "events": events,
-        "documents": _documents(rng, shape["n_docs"]),
-        "embeddings": embeddings,
-    }
-    os.makedirs(out_dir, exist_ok=True)
-    for name, tab in tables.items():
-        pq.write_table(tab, f"{out_dir}/{name}.parquet")
-    return {"sf_dir": out_dir, "rows": {n: t.num_rows for n, t in tables.items()}}
-
-
-def prepare(spark, workload: str, seed: int, cache_root: str) -> tuple[dict, float, bool]:
-    """Return (inputs metadata, generation seconds, cache hit) for one
-    (workload, seed); generates into ``cache_root`` on a miss. The set-up
-    log is workload ``warmup`` at WARMUP_SEED. ``meta.json`` is written
-    last, so an entry without it is incomplete and made again."""
-    entry = f"{cache_root}/v{CACHE_VERSION}-{workload}-{seed}"
-    meta_path = f"{entry}/meta.json"
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            return json.load(f), 0.0, True
-    t0 = time.perf_counter()
-    shutil.rmtree(entry, ignore_errors=True)
-    os.makedirs(entry)
-    meta: dict = {"workload": workload, "seed": seed}
-    if workload == "operators":
-        meta["tables"] = write_operator_tables(OPERATORS, seed, f"{entry}/tables")
-    else:
-        shape = TAIL if workload == "tail" else WARMUP
-        meta["log"] = write_change_log(spark, shape, seed, f"{entry}/log")
-    with open(meta_path, "w") as f:
+    with open(f"{entry}/meta.json", "w") as f:
         json.dump(meta, f)
-    return meta, time.perf_counter() - t0, False
+
+
+def prepare_logs(cache_root: str, jobs: list[tuple[dict, int]]) -> tuple[list[dict], float, bool]:
+    """Return (log metadata per job, generation seconds, all cached) for
+    ``jobs`` of (shape, seed). Missing logs are generated by one child
+    process, which has ended when this returns."""
+    entries = [_entry(cache_root, shape, seed) for shape, seed in jobs]
+    missing = [
+        {"entry": e, "shape": shape, "seed": seed}
+        for e, (shape, seed) in zip(entries, jobs)
+        if not os.path.exists(f"{e}/meta.json")
+    ]
+    t0 = time.perf_counter()
+    if missing:
+        subprocess.run(
+            [sys.executable, "-m", "cdcbench.inputs", json.dumps(missing)],
+            cwd=os.path.dirname(HERE), check=True, stdout=subprocess.DEVNULL,
+        )
+    gen_s = time.perf_counter() - t0
+    metas = []
+    for e in entries:
+        with open(f"{e}/meta.json") as f:
+            metas.append(json.load(f))
+    return metas, gen_s, not missing
+
+
+def operator_tables() -> dict:
+    """The fixed operators tables: directory and row count."""
+    rows = sum(
+        pq.read_metadata(f"{OPERATORS_DIR}/{t}.parquet").num_rows for t in OPERATORS_TABLES
+    )
+    return {"sf_dir": OPERATORS_DIR, "rows": rows}
+
+
+def query_order(names: list[str], seed: int) -> list[str]:
+    """The operators pass runs its queries in a seeded order."""
+    order = list(names)
+    random.Random(seed).shuffle(order)
+    return order
+
+
+def _generate(jobs: list[dict]) -> None:
+    from cdcbench import jvm
+
+    spark = jvm.start("cdcbench-inputs")
+    try:
+        for job in jobs:
+            _write_log(spark, job["shape"], job["seed"], job["entry"])
+    finally:
+        jvm.stop(spark)
+
+
+if __name__ == "__main__":
+    _generate(json.loads(sys.argv[1]))

@@ -5,8 +5,9 @@ Usage (from the repository root):
     python3 cdcbench/run.py --workload tail|operators \
         --seed N --seconds S --trace 0|1
 
-The run starts a local SparkSession on every core, makes (or reuses) its
-inputs from the seed, sets up, then repeats the workload's closed-loop pass
+The run makes (or reuses) its inputs from the seed — tail logs in a child
+process, before the measuring JVM starts — starts a local SparkSession on
+every core, sets up, then repeats the workload's closed-loop pass
 for S seconds and checks every output against DuckDB. The last line of
 standard output is one JSON object: ``correct``, ``attempted``, ``failed``
 and ``metrics`` — the end-to-end metrics with ``--trace 0``, the per-layer
@@ -21,16 +22,16 @@ import argparse
 import json
 import os
 import shutil
-import subprocess
 import sys
 import time
 
 ROOT = os.getcwd()
 WORK = os.path.join(ROOT, ".cdcbench_work")
 WORKLOADS = ("tail", "operators")
-# fewest passes a run measures: the operators figures are medians over
-# passes, and the first pass after set-up still runs partly cold
-MIN_PASSES = {"tail": 1, "operators": 3}
+# fewest passes a run measures: the figures are medians over passes
+MIN_PASSES = {"tail": 1, "operators": 2}
+# untallied operators passes in set-up, after the checked one
+WARM_PASSES = 1
 
 
 def _parse() -> argparse.Namespace:
@@ -187,6 +188,7 @@ def _layer_metrics(tally, tracer, rss_mb: float) -> dict:
     ]
     m = {
         "workload.pass_s": (med(s["pass_s"]), "s", "lower"),
+        "jvm.jit_per_pass_s": (med(s["pass_jit_s"]), "s", "lower"),
         "streaming.epochs_per_pass": (med(s.get("epochs", [])), "count", "lower"),
         "streaming.trigger_overhead_s": (med(over), "s", "lower"),
         "streaming.add_batch_s": (med(s.get("add_batch_s", [])), "s", "lower"),
@@ -254,32 +256,27 @@ def main() -> int:
         shutil.rmtree(run_dir, ignore_errors=True)
 
 
-def _stop(spark) -> None:
-    """Stop the session and wait for the driver JVM to exit."""
-    gateway = spark.sparkContext._gateway
-    proc = gateway.proc
-    spark.stop()
-    gateway.shutdown()
-    if proc is not None:
-        proc.stdin.close()  # the gateway JVM exits when its stdin closes
-        try:
-            proc.wait(timeout=60)
-        except subprocess.TimeoutExpired:
-            proc.kill()
-            proc.wait()
-
-
 def _run(args, run_dir: str) -> int:
     import pyspark
 
+    from cdcbench import jvm
+    from cdcbench.inputs import (
+        TAIL, WARMUP, WARMUP_SEED, operator_tables, prepare_logs, query_order,
+    )
     from cdcbench.trace import ProgressListener, Tracer
-    from cdcbench.inputs import WARMUP_SEED, prepare as prepare_inputs
-    from cdcbench.workloads import OperatorsWorkload, TailWorkload, Tally, median
-    from tiflow_spark.session import get_spark
+    from cdcbench.workloads import (
+        OPERATOR_QUERIES, OperatorsWorkload, TailWorkload, Tally, median,
+    )
 
-    cores = os.cpu_count() or 1
+    gen_s, cache_hit = 0.0, True
+    if args.workload == "tail":
+        # generated (or found in the cache) before the measuring session
+        # starts: every run's set-up begins from a fresh JVM
+        (warm_log, log), gen_s, cache_hit = prepare_logs(
+            f"{WORK}/cache", [(WARMUP, WARMUP_SEED), (TAIL, args.seed)])
+
     t0 = time.perf_counter()
-    spark = get_spark("cdcbench", cores=cores, shuffle_partitions=cores)
+    spark = jvm.start("cdcbench")
     try:
         listener = ProgressListener()
         spark.streams.addListener(listener)
@@ -287,43 +284,36 @@ def _run(args, run_dir: str) -> int:
 
         tracer = Tracer(spark) if args.trace else None
         tally = Tally()
-        cache = f"{WORK}/cache"
         if args.workload == "operators":
-            # the fixtures are drawn with numpy, so making them first cannot
-            # warm the engine; set-up is one pass of every query, collected
-            # and checked against its oracle (the check itself is untimed)
+            # set-up: one pass collected and checked against the oracles
+            # (the check itself is untimed), then WARM_PASSES to the noop sink
             wl = OperatorsWorkload(spark, tracer)
-            meta, gen_s, cache_hit = prepare_inputs(spark, args.workload, args.seed, cache)
-            wl.load(meta)
-            warm_s = wl.warmup_and_verify(tally)
+            wl.load(operator_tables(), query_order(OPERATOR_QUERIES, args.seed))
+            warm_s = wl.warmup_and_verify(tally, WARM_PASSES)
         else:
-            # set-up drains the fixed warm-up log (cached after the first
-            # run) into a throwaway table before the seeded log is
-            # generated, so that generation cannot warm the engine
+            # set-up drains the fixed warm-up log into a throwaway table
             wl = TailWorkload(spark, run_dir, listener, tracer)
-            warm_meta, _, _ = prepare_inputs(spark, "warmup", WARMUP_SEED, cache)
+            wl.load(log)
             t1 = time.perf_counter()
-            wl.warmup(warm_meta)
+            wl.warmup(warm_log)
             warm_s = time.perf_counter() - t1
-            meta, gen_s, cache_hit = prepare_inputs(spark, args.workload, args.seed, cache)
-            wl.load(meta)
         setup_s = session_s + warm_s
 
         if tracer is not None:
             tracer.install()
         t_measure = time.perf_counter()
-        jvm = _jvm_pid(spark)
+        jvm_pid = _jvm_pid(spark)
         while True:
-            cpu0 = _tree_cpu_s(jvm) + sum(os.times()[:2])
+            cpu0 = _tree_cpu_s(jvm_pid) + sum(os.times()[:2])
             jit0 = _jit_s(spark)
             try:
                 wl.one_pass(tally)
             except Exception as e:  # noqa: BLE001 — counted; the run goes on
                 tally.op(False, f"pass: {type(e).__name__}: {e}"[:300])
-            # JIT compilation is the JVM warming up, not the pass's work
-            jit = _jit_s(spark) - jit0
-            tally.add("pass_jit_s", jit)
-            tally.add("pass_cpu_s", _tree_cpu_s(jvm) + sum(os.times()[:2]) - cpu0 - jit)
+            # JIT compilation is counted in the pass's CPU (the engine keeps
+            # compiling the code its plans generate) and reported apart
+            tally.add("pass_jit_s", _jit_s(spark) - jit0)
+            tally.add("pass_cpu_s", _tree_cpu_s(jvm_pid) + sum(os.times()[:2]) - cpu0)
             if (time.perf_counter() - t_measure >= args.seconds
                     and len(tally.samples["pass_cpu_s"]) >= MIN_PASSES[args.workload]):
                 break
@@ -332,7 +322,7 @@ def _run(args, run_dir: str) -> int:
             tracer.uninstall()
         # JVM peak plus the Python driver's resident size, taken before the
         # untimed checks load their data
-        rss_mb = (_status_kb(jvm, "VmHWM") + _status_kb("self", "VmRSS")) / 1024.0
+        rss_mb = (_status_kb(jvm_pid, "VmHWM") + _status_kb("self", "VmRSS")) / 1024.0
         if "pass_s" not in tally.samples:
             print(f"no pass completed: {tally.errors}", file=sys.stderr)
             return 1
@@ -340,7 +330,7 @@ def _run(args, run_dir: str) -> int:
 
         info = {
             "workload": args.workload, "seed": args.seed, "trace": args.trace,
-            "nproc": cores, "ram_gib": round(_mem_total_bytes() / 2**30, 1),
+            "nproc": jvm.cores(), "ram_gib": round(_mem_total_bytes() / 2**30, 1),
             "driver_mem": os.environ["TIFLOW_SPARK_DRIVER_MEM"],
             "pyspark": pyspark.__version__,
             "java": spark.sparkContext._jvm.System.getProperty("java.version"),
@@ -375,7 +365,7 @@ def _run(args, run_dir: str) -> int:
         }))
         return 0
     finally:
-        _stop(spark)
+        jvm.stop(spark)
 
 
 if __name__ == "__main__":

@@ -8,8 +8,8 @@ next epoch, read or query starts only after the previous one commits.
   into a fresh 256-range-bucket COW table through the streaming changefeed,
   then read each epoch's changes (``changes_between(s-1, s)``) and the full
   ``snapshot()``, both to the noop sink.
-- operators: eight of the headline bench queries, each written to the noop
-  sink.
+- operators: bench.py's twelve headline queries over the fixed sf0.01
+  tables, in a seeded order, each written to the noop sink.
 """
 
 from __future__ import annotations
@@ -23,19 +23,21 @@ from dataclasses import dataclass, field
 
 from cdcbench import check
 
-# Eight of bench.py's twelve headline queries: two per layer family
-# (operators.lww/update_split, functions.text, functions.dedup,
-# functions.similarity). The other four (cdc_net_op_algebra,
-# cdc_checksum_chunks, dedup_simhash, ann_lsh_topk) repeat a family and
-# would not fit a run's time.
+# bench.py's twelve headline queries (BENCH_QUERIES): operators.lww,
+# update_split and validate, functions.text, functions.dedup and
+# functions.similarity.
 OPERATOR_QUERIES = [
     "cdc_lww_final_state",
+    "cdc_net_op_algebra",
     "cdc_update_split",
+    "cdc_checksum_chunks",
     "text_stats",
     "text_lang_id",
     "dedup_exact",
     "dedup_minhash_sigs",
+    "dedup_simhash",
     "ann_topk",
+    "ann_lsh_topk",
     "embedding_near_dups",
 ]
 
@@ -80,8 +82,8 @@ class TailWorkload:
         self.n_pass = 0
         self.last_table = None
 
-    def load(self, meta: dict) -> None:
-        self.log = meta["log"]
+    def load(self, log: dict) -> None:
+        self.log = log
 
     def drain(self, log: dict, tag: str, tally: Tally | None):
         """Drain ``log`` into a fresh table under ``tag``; returns the table."""
@@ -106,7 +108,8 @@ class TailWorkload:
             spark=self.spark, events_dir=log["events_dir"],
             checkpoint_dir=f"{root}/ckpt", table=table,
             registry=default_registry(log["ddl_ts"]),
-            max_files_per_trigger=log["files_per_epoch"],
+            # the log has one file per epoch, so one trigger is one epoch
+            max_files_per_trigger=1,
         )
         t0 = time.perf_counter()
         with _span(self.tracer, "streaming.drain", tag=tag):
@@ -156,10 +159,10 @@ class TailWorkload:
         tally.add("snapshot_read_s", time.perf_counter() - t0)
         tally.op(True)
 
-    def warmup(self, warm_meta: dict) -> None:
+    def warmup(self, warm_log: dict) -> None:
         """Set-up on a throwaway table: drain the warm-up log and read it
         back through the same read paths."""
-        table = self.drain(warm_meta["log"], "warmup", None)
+        table = self.drain(warm_log, "warmup", None)
         _noop(table.changes_between(-1, int(table.current_manifest()["seq"])))
         _noop(table.snapshot())
         shutil.rmtree(f"{self.workdir}/warmup", ignore_errors=True)
@@ -195,19 +198,19 @@ class OperatorsWorkload:
         self.queries, self.oracles = QUERIES, ORACLES
         self.sf_dir = ""
         self.rows = 0
+        self.order: list[str] = []
 
-    def load(self, meta: dict) -> None:
-        self.sf_dir = meta["tables"]["sf_dir"]
-        self.rows = sum(meta["tables"]["rows"].values())
+    def load(self, tables: dict, order: list[str]) -> None:
+        self.sf_dir, self.rows, self.order = tables["sf_dir"], tables["rows"], order
 
-    def warmup_and_verify(self, tally: Tally) -> float:
-        """Set-up pass: every query once, collected to the driver and
-        checked against its DuckDB oracle. Returns the engine seconds only
-        (the oracle comparison is untimed)."""
+    def warmup_and_verify(self, tally: Tally, extra_passes: int) -> float:
+        """Set-up: every query once, collected to the driver and checked
+        against its DuckDB oracle, then ``extra_passes`` untallied passes.
+        Returns the engine seconds only (the oracle comparison is untimed)."""
         oracle = check.QueryOracle(self.sf_dir, self.oracles)
         engine_s = 0.0
         try:
-            for name in OPERATOR_QUERIES:
+            for name in self.order:
                 t0 = time.perf_counter()
                 sdf = self.queries[name](self.spark, self.sf_dir)
                 rows = [tuple(r) for r in sdf.collect()]
@@ -216,12 +219,16 @@ class OperatorsWorkload:
                 tally.op(ok, why)
         finally:
             oracle.close()
-        return engine_s
+        t0 = time.perf_counter()
+        for _ in range(extra_passes):
+            for name in self.order:
+                _noop(self.queries[name](self.spark, self.sf_dir))
+        return engine_s + time.perf_counter() - t0
 
     def one_pass(self, tally: Tally) -> None:
         suite = 0.0
         with _span(self.tracer, "pass"):
-            for name in OPERATOR_QUERIES:
+            for name in self.order:
                 t0 = time.perf_counter()
                 with _span(self.tracer, f"query.{name}"):
                     _noop(self.queries[name](self.spark, self.sf_dir))
