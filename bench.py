@@ -105,45 +105,6 @@ def run_cdc_stream(spark, n_convs: int, workdir: str) -> dict:
     }
 
 
-def run_cdc_stream_observed(spark, n_convs: int, workdir: str) -> dict:
-    """Same feed as run_cdc_stream with frontier_mode='observe': the
-    frontier/lineage aggregates ride the LWW job instead of a separate
-    column-pruned scan — one fewer Spark job per epoch. Measured (r4) to
-    LOSE to scan at every epoch size on local[32] (the 64x2 conditional
-    aggregates per input row cost more than the extra pruned job); kept
-    as the documented negative result behind the scan default."""
-    import glob
-
-    from tiflow_spark.sinks.cow_table import CowTable
-    from tiflow_spark.sources.datagen import GenSpec, write_epoch_files
-    from tiflow_spark.sources.registry import default_registry
-    from tiflow_spark.streaming.runner import Changefeed
-
-    spec = GenSpec(n_convs=n_convs, hot_turns=256, n_source_partitions=32)
-    events_dir = f"{workdir}/stream_events"  # shared with run_cdc_stream
-    if not glob.glob(events_dir + "/epoch_*"):
-        write_epoch_files(spark, spec, events_dir)
-    n = spark.read.parquet(*glob.glob(events_dir + "/epoch_*")).count()
-
-    table = CowTable(spark, f"{workdir}/obs_table", n_buckets=32,
-                     auto_vacuum_keep=3)
-    feed = Changefeed(
-        spark=spark, events_dir=events_dir + "/epoch_*",
-        checkpoint_dir=f"{workdir}/obs_ckpt", table=table,
-        registry=default_registry(spec.ddl_ts), max_files_per_trigger=64,
-        frontier_mode="observe",
-    )
-    t0 = time.time()
-    feed.run_available_now()
-    dt = time.time() - t0
-    return {
-        "events": n,
-        "epochs": len(feed.batch_log),
-        "seconds": round(dt, 3),
-        "events_per_sec": round(n / dt),
-    }
-
-
 def run_cdc_stream_mor(spark, n_convs: int, workdir: str) -> dict:
     """Same commit_ts-banded feed as run_cdc_stream, but the sink runs
     merge-on-read: epochs append per-bucket deltas (no reconcile read of
@@ -324,7 +285,6 @@ def main() -> None:
             return {"error": f"{type(e).__name__}: {e}"[:300]}
 
     stream = _guarded(run_cdc_stream)
-    stream_observed = _guarded(run_cdc_stream_observed)
     stream_mor = _guarded(run_cdc_stream_mor)
     stream_keylocal = _guarded(run_cdc_stream_keylocal)
     cdf_incremental = _guarded(run_cdf_incremental)
@@ -340,7 +300,6 @@ def main() -> None:
                 "sf": float(sf),
                 "cdc_replay": replay,
                 "cdc_stream": stream,
-                "cdc_stream_observed": stream_observed,
                 "cdc_stream_mor": stream_mor,
                 "cdc_stream_keylocal": stream_keylocal,
                 "cdf_incremental": cdf_incremental,

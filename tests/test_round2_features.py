@@ -14,7 +14,6 @@ from tests.test_e2e_replay import assert_matches_oracle, oracle_state
 from tiflow_spark.functions import dedup as dd
 from tiflow_spark.functions import similarity as sim
 from tiflow_spark.functions.decode import decode_payload, decode_pre_image
-from tiflow_spark.operators.frontier import observe_frontiers
 from tiflow_spark.operators.update_split import split_updates
 from tiflow_spark.sinks.cow_table import CowTable, data_schema_from_registry
 from tiflow_spark.sources.datagen import GenSpec, write_epoch_files
@@ -258,16 +257,6 @@ def test_frontier_carry_forward(spark, tmp_path):
     df3 = spark.createDataFrame([("I", 3, 2, "c", 2, "u", "z", None, None, 0)], schema)
     table.merge(df3, batch_id=2, lineage_rows=[(2, 0, 850, 1)])
     assert table.current_manifest()["resolved_ts"] == 850
-
-
-def test_observe_frontiers_overflow_raises(spark):
-    df = spark.createDataFrame(
-        [(100, 2), (200, 70)], "commit_ts LONG, source_partition INT"
-    )
-    observed, fetch = observe_frontiers(df, max_partitions=64)
-    observed.write.format("noop").mode("overwrite").save()
-    with pytest.raises(ValueError, match="source_partition"):
-        fetch()
 
 
 def test_gc_tombstones_returns_real_count(spark, tmp_path):

@@ -722,45 +722,6 @@ def test_lineage_survives_vacuum_of_1000_manifests(spark, tmp_path):
     assert table.last_committed_batch() == 999
 
 
-# ---------------------------------------------------------------- observed
-# frontier mode
-
-def test_observed_frontier_mode_matches_scan_mode(spark, tmp_path):
-    """frontier_mode='observe' rides the frontier/lineage aggregates on the
-    LWW job (one fewer Spark job per epoch — the streaming-cadence win);
-    final state, manifest lineage, and frontiers must be identical to the
-    default scan mode."""
-    from tests.test_e2e_replay import assert_matches_oracle, oracle_state
-    from tiflow_spark.sources.datagen import GenSpec, write_epoch_files
-    from tiflow_spark.streaming.runner import Changefeed
-
-    spec = GenSpec(n_convs=40, seed=37)
-    events_dir = str(tmp_path / "events")
-    write_epoch_files(spark, spec, events_dir)
-
-    tables = {}
-    for mode in ("scan", "observe"):
-        t = CowTable(spark, str(tmp_path / f"t_{mode}"), n_buckets=8)
-        Changefeed(
-            spark=spark, events_dir=events_dir + "/epoch_*",
-            checkpoint_dir=str(tmp_path / f"ckpt_{mode}"), table=t,
-            registry=default_registry(spec.ddl_ts), max_files_per_trigger=2,
-            frontier_mode=mode,
-        ).run_available_now()
-        tables[mode] = t
-
-    assert_matches_oracle(tables["observe"], oracle_state(spark, spec))
-    lin = {
-        mode: sorted(tuple(r) for r in t.lineage().collect())
-        for mode, t in tables.items()
-    }
-    assert lin["observe"] == lin["scan"]
-    assert (
-        tables["observe"].current_manifest()["frontiers"]
-        == tables["scan"].current_manifest()["frontiers"]
-    )
-
-
 def test_simple_protocol_roundtrip(spark):
     """"simple" protocol DML envelope (simple/message.go:472-502):
     INSERT/UPDATE/DELETE types, data+old blocks, schemaVersion carried;

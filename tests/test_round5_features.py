@@ -60,6 +60,13 @@ def test_merge_carries_gc_safepoint_forward(spark, tmp_path):
     )
     assert table.current_manifest()["gc_below"] == 25
 
+    # monotone in gc_tombstones too: a late delete below the horizon, then
+    # a GC at a LOWER bound that removes it, must not lower the safepoint
+    table.merge(_direct_rows(
+        [("D", 10, 9, 0, "c3", 0, "u", "three", None)], spark), batch_id=4)
+    assert table.gc_tombstones(below_resolved_ts=15) == 1
+    assert table.current_manifest()["gc_below"] == 25
+
     # and the controller's resume guard keeps firing after those merges
     from tiflow_spark.streaming.controller import ChangefeedController
 
@@ -71,14 +78,12 @@ def test_merge_carries_gc_safepoint_forward(spark, tmp_path):
 
 
 # ---------------------------------------------------------------- ADVICE low:
-# empty microbatch drains a non-empty pending store (scan AND observe modes)
+# empty microbatch drains a non-empty pending store
 
-@pytest.mark.parametrize("mode", ["scan", "observe"])
+@pytest.mark.parametrize("mode", ["scan"])
 def test_empty_batch_drains_pending(spark, tmp_path, mode):
-    """ADVICE r4 (low): in frontier_mode='observe', an empty microbatch that
-    drains a non-empty pending store tripped the lost-metrics invariant
-    (observation wraps only the empty new events → fetch()==[], while the
-    pending rows make the reduce non-empty). Both modes must apply the
+    """ADVICE r4 (low): an empty microbatch that drains a non-empty pending
+    store has empty lineage but a non-empty reduce. It must apply the
     withheld rows and clear the pending reference."""
     reg = [SchemaVersion(1, 0, PAYLOAD_V1)]
     table = CowTable(spark, str(tmp_path / f"t_{mode}"), n_buckets=2)
@@ -95,7 +100,7 @@ def test_empty_batch_drains_pending(spark, tmp_path, mode):
     assert table.read_pending().count() == 2
 
     empty = spark.createDataFrame([], EV_SCHEMA)
-    r1 = apply_epoch(table, reg, empty, 1, frontier_mode=mode)
+    r1 = apply_epoch(table, reg, empty, 1)
     assert not r1.stats.skipped
     assert {r["conv_id"] for r in table.snapshot().collect()} == {"a", "b", "c"}
     assert table.current_manifest().get("pending") is None

@@ -38,81 +38,3 @@ def resolved_ts(events: DataFrame) -> int | None:
     row = partition_frontiers(events).agg(F.min("resolved_ts").alias("rts")).first()
     return row["rts"] if row else None
 
-
-def observe_frontiers(events: DataFrame, max_partitions: int = 64):
-    """Frontier + lineage as *observed metrics* riding on whatever job next
-    scans ``events`` — zero extra pass over the input (the reference
-    likewise advances resolved-ts inline on the event stream,
-    /root/reference/cdc/puller/multiplexing_puller.go:440-480).
-
-    Spark's Observation API only supports global aggregates, so the
-    per-partition maxima/counts are expressed as one conditional aggregate
-    pair per source partition id (bounded by ``max_partitions`` — a config
-    of the log layout, 32 by default in the generator).
-
-    Returns (events_with_observer, fetch) where fetch() — valid after an
-    action ran — yields [(source_partition, resolved_ts, n_events), ...].
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation("frontiers")
-    aggs = []
-    metric_names = []
-    for p in range(max_partitions):
-        cond = F.col("source_partition") == p
-        aggs.append(F.max(F.when(cond, F.col("commit_ts"))).alias(f"rts_{p}"))
-        aggs.append(F.sum(F.when(cond, 1).otherwise(0)).alias(f"n_{p}"))
-        metric_names += [f"rts_{p}", f"n_{p}"]
-    # overflow guard: a source_partition >= max_partitions would otherwise be
-    # merged but silently excluded from lineage and the resolved_ts min —
-    # a wrong (overstated) watermark. Count them and fail loudly.
-    over = F.col("source_partition") >= max_partitions
-    aggs.append(F.sum(F.when(over, 1).otherwise(0)).alias("n_overflow"))
-    aggs.append(F.max(F.when(over, F.col("source_partition"))).alias("max_overflow"))
-    metric_names += ["n_overflow", "max_overflow"]
-    observed = events.observe(obs, *aggs)
-
-    def _metrics() -> dict | None:
-        try:
-            return obs.get
-        except Exception:
-            # an EMPTY batch (e.g. the trailing AvailableNow microbatch)
-            # optimizes to a LocalRelation whose CollectMetrics never
-            # fires — the observation holds a 0-length row, which
-            # PythonSQLUtils.toPyRow rejects. Read the row through the
-            # Scala Row API instead: empty row = empty batch (the caller
-            # cross-checks against the actual reduce output); a full row
-            # reads positionally (metric order = the observe() argument
-            # order, all longs, which py4j converts natively).
-            jrow = obs._jo.getRow()
-            if jrow.length() == 0:
-                return None
-            if jrow.length() != len(metric_names):
-                # explicit raise (not assert — stripped under python -O): a
-                # metric-count mismatch would silently misalign names to
-                # values and corrupt the watermark
-                raise RuntimeError(
-                    f"observe_frontiers: CollectMetrics row has "
-                    f"{jrow.length()} fields, expected {len(metric_names)} — "
-                    "Spark changed the observation row layout"
-                )
-            return {n: jrow.get(i) for i, n in enumerate(metric_names)}
-
-    def fetch() -> list[tuple[int, int, int]]:
-        m = _metrics()
-        if m is None:
-            return []
-        if m["n_overflow"]:
-            raise ValueError(
-                f"observe_frontiers: {m['n_overflow']} events carry "
-                f"source_partition up to {m['max_overflow']}, beyond "
-                f"max_partitions={max_partitions} — raise max_partitions to "
-                "match the feed's source layout or the watermark would be wrong"
-            )
-        return [
-            (p, int(m[f"rts_{p}"]), int(m[f"n_{p}"]))
-            for p in range(max_partitions)
-            if m[f"n_{p}"] and m[f"rts_{p}"] is not None
-        ]
-
-    return observed, fetch

@@ -46,8 +46,6 @@ def apply_epoch(
     strict_frontier: bool = False,
     version_gate: int | None = None,
     manifest_extra: dict | None = None,
-    frontier_mode: str = "scan",
-    frontier_observe_partitions: int = 64,
     capture_net: bool = False,
 ) -> EpochResult:
     """Process one microbatch of raw change events into the table.
@@ -104,54 +102,27 @@ def apply_epoch(
     manifest_extra = dict(manifest_extra or {})
     prev_pending = table.read_pending()
 
-    # frontier + lineage: two modes —
-    # - "scan" (default, and measured-fastest at every scale tried): a
-    #   SEPARATE tiny job whose scan projects only (source_partition,
-    #   commit_ts); parquet column pruning makes it ~1% of the main job.
-    #   Round 1: the observation variant at 59.8M events added 5.9s to a
-    #   9.3s job vs 0.69s for the pruned scan. Round 4 re-measured at
-    #   streaming cadence hoping the one-job saving would win there:
-    #   still no — 33x8k-event epochs, scan 1.6-2.1s/epoch vs observe
-    #   2.4s/epoch; 5x300k-event epochs, 89.7k vs 85.5k ev/s. The 64x2
-    #   conditional aggregates evaluated per input row cost more than one
-    #   extra column-pruned job at every epoch size on local[32].
-    # - "observe": the aggregates ride the LWW job itself (zero extra
-    #   job) — the reference's inline resolved-ts shape
-    #   (multiplexing_puller.go:440-480). Kept as an option (correct,
-    #   oracle-tested) for deployments where job-scheduling latency
-    #   dominates (e.g. high-latency cluster managers), but the default
-    #   stays "scan" per the measurements above.
-    fetch = None
-    frontier_fut = None
-    if frontier_mode == "observe":
-        from tiflow_spark.operators.frontier import observe_frontiers
+    # frontier + lineage: a SEPARATE tiny job whose scan projects only
+    # (source_partition, commit_ts) — parquet column pruning makes it ~1%
+    # of the main job — overlapped with the LWW job below (guide §2.6):
+    # both only READ the batch, the scheduler back-fills the frontier tasks
+    # into the LWW stage's tail, and the result is joined before the merge
+    # needs it (~0.3s/epoch hidden at 300k-event epochs). Riding the
+    # aggregates on the LWW job as observed metrics saves that job but
+    # measured slower in rounds 1, 4 and 6: 64x2 conditional aggregates per
+    # input row cost more than one column-pruned job.
+    from concurrent.futures import ThreadPoolExecutor
 
-        ev, fetch = observe_frontiers(ev, max_partitions=frontier_observe_partitions)
-        lineage_rows = None
-        resolved = None
-    else:
-        # overlap the (column-pruned, ~1%-sized) frontier job with the LWW
-        # job below (guide §2.6): both only READ the batch, the scheduler
-        # back-fills the frontier tasks into the LWW stage's tail, and the
-        # result is joined before the merge commit needs it. Measured
-        # ~0.3s/epoch hidden at 300k-event epochs.
-        from concurrent.futures import ThreadPoolExecutor
-
-        _frontier_pool = ThreadPoolExecutor(max_workers=1)
-        frontier_fut = _frontier_pool.submit(
-            lambda: partition_frontiers(batch).collect()
-        )
-        _frontier_pool.shutdown(wait=False)
-        lineage_rows = None
-        resolved = None
+    _frontier_pool = ThreadPoolExecutor(max_workers=1)
+    frontier_fut = _frontier_pool.submit(lambda: partition_frontiers(batch).collect())
+    _frontier_pool.shutdown(wait=False)
 
     if prev_pending is not None:
         # pending events were lineage-counted by the epoch that withheld
-        # them — fold them into the LWW only, and clear the reference.
-        # (observe mode: the observer wraps only the NEW events, so pending
-        # rows are correctly excluded from this epoch's lineage counts.
-        # An EMPTY microbatch still drains: the withheld rows merge with
-        # zero new lineage rather than sitting in the store forever.)
+        # them — fold them into the LWW only (the frontier job scans the
+        # NEW events), and clear the reference. An EMPTY microbatch still
+        # drains: the withheld rows merge with zero new lineage rather than
+        # sitting in the store forever.
         dp = prev_pending.drop(
             *[c for c in ("pre_payload", "op_order") if c in prev_pending.columns]
         )
@@ -163,36 +134,18 @@ def apply_epoch(
     # expressions (measured ~75x slower); the cache is a plan barrier and
     # the net rows (one per live key) are the smallest point in the pipeline
     net = lww_latest(ev).withColumn("bucket", table._bucket_col()).persist()
-    # ONE action materializes the cache (whole partitions, a plan barrier —
-    # decoding after the aggregate would otherwise fold from_json into its
-    # result expressions, measured ~75x slower) AND yields the affected
-    # buckets; a separate count() first was a second full job per epoch
-    affected = [int(r["bucket"]) for r in net.select("bucket").distinct().collect()]
-    if frontier_fut is not None:
+    try:
+        # ONE action materializes the cache (whole partitions, a plan
+        # barrier) AND yields the affected buckets; a separate count()
+        # first was a second full job per epoch
+        affected = [int(r["bucket"]) for r in net.select("bucket").distinct().collect()]
+        # joined inside the try: a failed frontier job must not leave net
+        # cached for the rest of a long-lived session
         lineage_rows = [
             (batch_id, int(r["source_partition"]), int(r["resolved_ts"]), int(r["n_events"]))
             for r in frontier_fut.result()
         ]
         resolved = min((r[2] for r in lineage_rows), default=None)
-    if fetch is not None:
-        # observation metrics are valid once the action above ran
-        lineage_rows = [(batch_id, p, rts, n) for (p, rts, n) in fetch()]
-        resolved = min((r[2] for r in lineage_rows), default=None)
-        if not lineage_rows and affected and prev_pending is None:
-            # invariant: a non-empty reduce with no observed lineage means
-            # the metrics were lost, not that the batch was empty — fail
-            # loudly rather than commit a merge with a zeroed watermark.
-            # Exception: when a pending store was drained, the reduce is
-            # legitimately non-empty on an empty new batch (the observation
-            # wraps only new events), so empty lineage is correct there.
-            net.unpersist()
-            raise RuntimeError(
-                "observe-mode frontier returned no metrics for a non-empty "
-                "batch — observation was optimized out; use frontier_mode="
-                "'scan' for this feed"
-            )
-
-    try:
         decode = decode_payload_pandas if decoder == "pandas" else decode_payload
         dec = decode(net, registry)
         if capture_net:

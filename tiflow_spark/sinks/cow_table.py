@@ -47,6 +47,23 @@ Scale notes (100 TB / 1000 executors):
 
 Single-writer assumption (same as one changefeed owner in the reference):
 one streaming query commits at a time.
+
+Commit contract. The manifest holds the checkpoint (batch_id), the
+watermark, the epoch fence and every store reference, and ``CowTable.commit
+(base, changes)`` is the only writer — merge, compact, gc_tombstones, the
+runner's validation and DLQ commits and the controller's fence reset all go
+through it (the reference likewise advances a checkpoint in one place,
+/root/reference/cdc/owner/changefeed.go:295-313):
+- every key of ``base`` (the manifest the caller read) carries forward
+  unless ``changes`` names it; naming a key with ``None`` clears it (stored
+  as null) — so a new manifest key needs no carry-forward clause anywhere;
+- ``seq`` becomes ``base["seq"] + 1`` and ``committed_at`` the wall clock;
+- the per-commit fields ``lineage`` (default ``[]``), ``applied_events``,
+  ``compacted`` and ``validation`` never carry forward;
+- ``gc_below`` (the tombstone-GC safepoint) is the max of the base and the
+  new value: dropping or lowering it would let ChangefeedController.resume
+  accept a rewind below the GC horizon and resurrect deleted rows;
+- the write is tmp + atomic rename of ``_manifest/{seq}.json``.
 """
 
 from __future__ import annotations
@@ -83,6 +100,10 @@ DEFAULT_DATA_SCHEMA = {"role": "string", "text": "string", "tool": "string", "ts
 LINEAGE_SCHEMA = (
     "batch_id LONG, source_partition INT, resolved_ts LONG, applied_events LONG"
 )
+
+# Manifest fields that describe one commit only; CowTable.commit never
+# carries them forward.
+PER_COMMIT = frozenset({"lineage", "applied_events", "compacted", "validation"})
 
 
 @dataclass
@@ -237,6 +258,25 @@ class CowTable:
             }
         return self._read_manifest(seqs[-1])
 
+    def commit(self, base: dict[str, Any], changes: dict[str, Any]) -> dict[str, Any]:
+        """Write the manifest that follows ``base`` (the manifest the caller
+        read) with ``changes`` applied, atomically; return it. The one way
+        to commit a table change — see the module docstring's contract:
+        every key of ``base`` carries forward unless ``changes`` names it
+        (``None`` stores null), the per-commit fields in ``PER_COMMIT``
+        reset, ``seq``/``committed_at`` advance, and ``gc_below`` only ever
+        rises."""
+        manifest = {k: v for k, v in base.items() if k not in PER_COMMIT}
+        manifest["lineage"] = []
+        manifest.update(changes)
+        gc = [int(v) for v in (base.get("gc_below"), changes.get("gc_below")) if v is not None]
+        if gc:
+            manifest["gc_below"] = max(gc)
+        manifest["seq"] = int(base["seq"]) + 1
+        manifest["committed_at"] = time.time()
+        self._commit_manifest(manifest)
+        return manifest
+
     def _commit_manifest(self, manifest: dict[str, Any]) -> None:
         seq = manifest["seq"]
         tmp = f"{self.root}/_manifest/_tmp.{seq}.json"
@@ -330,8 +370,12 @@ class CowTable:
             import pyarrow as pa
             import pyarrow.compute as pc
 
+            # nulls sort lowest, as in max_by's struct ordering (_resolve):
+            # a null version never beats a non-null one
             sort_keys = [(c, "ascending") for c in key_cols + vcols]
-            tbl = tbl.take(pc.sort_indices(tbl, sort_keys=sort_keys))
+            tbl = tbl.take(
+                pc.sort_indices(tbl, sort_keys=sort_keys, null_placement="at_start")
+            )
             tbl = tbl.append_column(
                 "__rowi", pa.array(np.arange(tbl.num_rows), pa.int64())
             )
@@ -473,64 +517,18 @@ class CowTable:
         batch_resolved = resolved_ts if resolved_ts is not None else frontier_resolved
         n_events = int(sum(r[3] for r in lineage_rows))
 
-        # a pending reference (strict-frontier withheld events) carries
-        # forward unless the caller explicitly replaces it: a non-strict
-        # merge (bootstrap, direct merge, restart with strict_frontier=False)
-        # must not orphan the pending dir — the next vacuum would delete it
-        # and the withheld events would be lost un-applied
-        extra = dict(manifest_extra or {})
-        if "pending" not in extra and manifest.get("pending"):
-            extra["pending"] = manifest["pending"]
-        # validation watermark (continuous validator) carries forward too —
-        # it marks the manifest seq last chunk-diffed, so restarts don't
-        # re-validate the whole table
-        if "validated_seq" not in extra and manifest.get("validated_seq") is not None:
-            extra["validated_seq"] = manifest["validated_seq"]
-        # the validator's captured-net references and pending-expected store
-        # (incremental continuous validation, streaming/runner.validate_now)
-        # carry forward like the pending store: dropping them would orphan
-        # the files and silently skip validating those epochs' rows
-        if "validator_nets" not in extra and manifest.get("validator_nets"):
-            extra["validator_nets"] = manifest["validator_nets"]
-        if "validator_pending" not in extra and manifest.get("validator_pending"):
-            extra["validator_pending"] = manifest["validator_pending"]
-        # unresolved dead-letter references (streaming/runner dead_letter
-        # mode) survive unrelated merges — dropping them would orphan the
-        # quarantined events before the operator resolves them
-        if "dlq" not in extra and manifest.get("dlq"):
-            extra["dlq"] = manifest["dlq"]
-        # cascade offset (streaming/cascade.py): the upstream manifest seq
-        # last consumed — losing it would make the next sync replay from
-        # the initial load
-        if "upstream_seq" not in extra and manifest.get("upstream_seq") is not None:
-            extra["upstream_seq"] = manifest["upstream_seq"]
-        # MQ consumer offset (sinks/mq.replay_mq track_offset): highest
-        # batch dir consumed — same carry-forward rationale
-        if "mq_batch" not in extra and manifest.get("mq_batch") is not None:
-            extra["mq_batch"] = manifest["mq_batch"]
-        # storage consumer offset (sinks/storage.replay_storage): highest
-        # CDC batch dir consumed — same carry-forward rationale
-        if "storage_batch" not in extra and manifest.get("storage_batch") is not None:
-            extra["storage_batch"] = manifest["storage_batch"]
-        # tombstone-GC safepoint carries forward MONOTONE (max): dropping it
-        # would let ChangefeedController.resume accept an
-        # overwrite_checkpoint_ts below the GC horizon on any merge after
-        # gc_tombstones — re-replication from there could resurrect deleted
-        # rows, the exact hazard EnsureChangefeedStartTsSafety blocks
-        if manifest.get("gc_below") is not None:
-            extra["gc_below"] = max(
-                int(manifest["gc_below"]), int(extra.get("gc_below") or -1)
-            )
-
         def commit(
             buckets: dict[str, str],
             applied: int,
             n_affected: int,
             deltas: dict[str, list[str]] | None = None,
         ) -> MergeStats:
-            self._commit_manifest(
+            # every other manifest key (pending store, validator and DLQ
+            # references, consumer offsets, gc_below, ...) carries forward
+            # inside commit() unless manifest_extra names it
+            self.commit(
+                manifest,
                 {
-                    "seq": manifest["seq"] + 1,
                     "batch_id": batch_id,
                     # table watermark: min over carried-forward partition
                     # frontiers (see _advance_frontiers)
@@ -538,7 +536,6 @@ class CowTable:
                     "frontiers": new_frontiers,
                     "buckets": buckets,
                     "deltas": deltas if deltas is not None else (manifest.get("deltas") or {}),
-                    "committed_at": time.time(),
                     "applied_events": applied,
                     # lineage rides the SAME atomic rename as the merge
                     "lineage": [list(r) for r in lineage_rows],
@@ -549,8 +546,8 @@ class CowTable:
                     "column_history": {
                         k: list(v) for k, v in self.column_history.items() if v
                     },
-                    **extra,
-                }
+                    **(manifest_extra or {}),
+                },
             )
             if self.auto_vacuum_keep is not None:
                 self.vacuum(keep_manifests=self.auto_vacuum_keep)
@@ -795,17 +792,7 @@ class CowTable:
             rel = f"{data_rel}/bucket={b}"
             if os.path.exists(f"{self.root}/{rel}"):
                 new_buckets[str(b)] = rel
-        self._commit_manifest(
-            {
-                **manifest,
-                "seq": manifest["seq"] + 1,
-                "buckets": new_buckets,
-                "deltas": {},
-                "committed_at": time.time(),
-                "compacted": affected,
-                "lineage": [],
-            }
-        )
+        self.commit(manifest, {"buckets": new_buckets, "deltas": {}, "compacted": affected})
         if self.auto_vacuum_keep is not None:
             self.vacuum(keep_manifests=self.auto_vacuum_keep)
         return len(affected)
@@ -937,16 +924,11 @@ class CowTable:
             bucket_dir = f"{data_rel}/bucket={b}"
             if os.path.exists(f"{self.root}/{bucket_dir}"):
                 new_buckets[str(b)] = bucket_dir
-        self._commit_manifest(
-            {
-                **manifest,
-                "seq": manifest["seq"] + 1,
-                "buckets": new_buckets,
-                "deltas": {},  # a GC rewrite folds deltas like a compact
-                "committed_at": time.time(),
-                "gc_below": below_resolved_ts,
-                "lineage": [],
-            }
+        # a GC rewrite folds deltas like a compact; commit() keeps gc_below
+        # monotone, so a GC below an earlier horizon never lowers it
+        self.commit(
+            manifest,
+            {"buckets": new_buckets, "deltas": {}, "gc_below": below_resolved_ts},
         )
         return removed
 

@@ -306,15 +306,7 @@ class ChangefeedController:
             # re-merge (convergent: the merge is version-conditional)
             m = table.current_manifest()
             if m["batch_id"] >= 0:
-                table._commit_manifest(
-                    {
-                        **m,
-                        "seq": m["seq"] + 1,
-                        "batch_id": -1,
-                        "committed_at": time.time(),
-                        "lineage": [],
-                    }
-                )
+                table.commit(m, {"batch_id": -1})
         spec["state"] = "normal"
         self._save(spec)
 

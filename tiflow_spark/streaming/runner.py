@@ -33,7 +33,6 @@ schema_storage.go:152-178) rather than silently NULLing its payload.
 from __future__ import annotations
 
 import json
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -138,12 +137,6 @@ class Changefeed:
     # into a manifest-referenced dead-letter store and keep replicating.
     # Resolve with dlq_resolve("skip") or dlq_resolve("replace", corrected).
     dead_letter: bool = False
-    # frontier/lineage job mode (plans/pipeline.apply_epoch): "scan" (a
-    # separate column-pruned job — measured fastest at replay AND
-    # streaming cadence on local[32]) or "observe" (aggregates ride the
-    # LWW job — one fewer Spark job per epoch; an option for deployments
-    # where job-scheduling latency dominates, see pipeline.py measurements)
-    frontier_mode: str = "scan"
     batch_log: list = field(default_factory=list)  # (batch_id, [name,] MergeStats)
     # changefeed.toml surface (config.load_changefeed_config): the table
     # filter and event-filter rules apply IN-FEED — op/txn/DDL ignores on
@@ -426,7 +419,6 @@ class Changefeed:
                 res = apply_epoch(
                     self.table, registry, batch_dml, int(batch_id),
                     decoder=self.decoder, strict_frontier=self.strict_frontier,
-                    frontier_mode=self.frontier_mode,
                     capture_net=self.validate_every > 0,
                     manifest_extra=dlq_extra,
                 )
@@ -804,17 +796,14 @@ class Changefeed:
                     dirs_exist_ok=True,
                 )
             record["evidence"] = evidence_rel
-        table._commit_manifest(
+        table.commit(
+            m,
             {
-                **m,
-                "seq": cur + 1,
                 "validation": record,
                 "validated_seq": cur + 1,
                 "validator_nets": [],
                 "validator_pending": new_pend,
-                "committed_at": time.time(),
-                "lineage": [],
-            }
+            },
         )
         # consumed captures (and the superseded pending generation) are now
         # unreferenced — reclaim eagerly; vacuum also catches them
@@ -919,16 +908,7 @@ class Changefeed:
             "row_diffs": result.row_diffs,
             "ok": result.identical,
         }
-        table._commit_manifest(
-            {
-                **m,
-                "seq": cur + 1,
-                "validation": record,
-                "validated_seq": cur + 1,
-                "committed_at": time.time(),
-                "lineage": [],
-            }
-        )
+        table.commit(m, {"validation": record, "validated_seq": cur + 1})
         self.validation_log.append((cur, record))
         return record
 
@@ -975,15 +955,7 @@ class Changefeed:
         n = self.dlq_list(table_name).count()
         applied = 0
         if action == "skip":
-            table._commit_manifest(
-                {
-                    **m,
-                    "seq": int(m["seq"]) + 1,
-                    "dlq": [],
-                    "committed_at": time.time(),
-                    "lineage": [],
-                }
-            )
+            table.commit(m, {"dlq": []})
         elif action == "replace":
             if replacement is None:
                 raise ValueError("dlq_resolve('replace') needs the corrected events")
