@@ -77,16 +77,14 @@ def test_reconcile_orders_null_versions_like_resolve(spark, tmp_path):
     assert reconciled == resolved
 
 
-class _FailingFrontiers:
-    def collect(self):
-        raise RuntimeError("frontier job failed")
+def _failing_frontier(events, bucket_col):
+    raise RuntimeError("frontier job failed")
 
 
 def test_failed_frontier_job_unpersists_net(spark, tmp_path, monkeypatch):
-    """The overlapped frontier job is joined inside the try/finally that
-    unpersists the cached net rows: its failure propagates and leaves no
-    cached RDD behind."""
-    monkeypatch.setattr(pipeline, "partition_frontiers", lambda df: _FailingFrontiers())
+    """A failing frontier-and-buckets job propagates its error, leaves no
+    cached RDD behind and commits nothing."""
+    monkeypatch.setattr(pipeline, "frontier_and_buckets", _failing_frontier)
     table = CowTable(spark, str(tmp_path / "t"), n_buckets=2)
     batch = spark.createDataFrame(
         [("I", 10, 9, "a", 0, 1, '{"role":"u","text":"a"}', None, 0)],

@@ -86,6 +86,23 @@ def test_near_dups_multi_table_dedup(spark):
     assert len(rows) == len(set(rows))
 
 
+def test_near_dups_exclude_zero_vectors_without_warning():
+    """A zero vector's cosine is 0/0: the bucket scorer drops it before the
+    matmul, so it pairs with nothing and numpy raises no RuntimeWarning."""
+    import warnings
+
+    import pandas as pd
+
+    bucket = pd.DataFrame(
+        {"id": [3, 1, 2], "qv": [[0, 0, 0, 0], [5, 1, 0, 2], [5, 1, 0, 2]]}
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        pairs = sim._score_bucket(bucket, 0.4)
+    assert pairs.values.tolist() == [[1, 2, 1.0]]
+    assert sim._score_bucket(bucket[bucket["id"] != 2], 0.4).empty
+
+
 def test_reconcile_by_bucket_equals_max_by(spark, tmp_path):
     """The Arrow last-per-key reduce must agree with the max_by formulation
     on ties, multiplicities and tombstones."""

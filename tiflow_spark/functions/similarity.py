@@ -224,6 +224,53 @@ def ivf_topk(
     return _topk_two_stage(scored, k, query_id_col, id_col)
 
 
+def _score_bucket(pdf, thr: float):
+    """All pairs ``id_a < id_b`` of one LSH bucket with cosine >= ``thr``,
+    as one blocked float64 matmul (see ``embedding_near_dups``). Zero
+    vectors are dropped before the matmul: their cosine is undefined (0/0),
+    so they never pair."""
+    import numpy as np
+    import pandas as pd
+
+    empty = pd.DataFrame(
+        {
+            "id_a": pd.Series(dtype="int64"),
+            "id_b": pd.Series(dtype="int64"),
+            "sim": pd.Series(dtype="float64"),
+        }
+    )
+    if len(pdf) < 2:
+        return empty
+    ids = pdf["id"].to_numpy()
+    order = np.argsort(ids, kind="stable")
+    q = np.stack(pdf["qv"].to_numpy()[order]).astype(np.float64)
+    norms = np.sqrt(np.einsum("ij,ij->i", q, q))
+    nonzero = norms > 0
+    ids, q, norms = ids[order][nonzero], q[nonzero], norms[nonzero]
+    n = len(ids)
+    out = []
+    blk = 4096  # bounds the sim tile at blk x B doubles per step
+    for s in range(0, n - 1, blk):
+        e = min(s + blk, n)
+        dots = q[s:e] @ q[s:].T
+        sims = dots / np.outer(norms[s:e], norms[s:])
+        rows, cols = np.nonzero(
+            (sims >= thr)
+            & (np.arange(s, n)[None, :] > np.arange(s, e)[:, None])
+        )
+        if len(rows):
+            out.append(
+                pd.DataFrame(
+                    {
+                        "id_a": ids[rows + s],
+                        "id_b": ids[cols + s],
+                        "sim": sims[rows, cols],
+                    }
+                )
+            )
+    return pd.concat(out) if out else empty
+
+
 def embedding_near_dups(
     corpus: DataFrame,
     dim: int,
@@ -236,7 +283,9 @@ def embedding_near_dups(
 ) -> DataFrame:
     """Near-duplicate pairs by cosine >= threshold, candidates limited to
     pairs sharing a bucket in ANY of ``n_tables`` independent hyperplane
-    tables. Output: (id_a, id_b, sim).
+    tables. Output: (id_a, id_b, sim). Zero vectors (all-zero after
+    quantization) are excluded: their cosine is undefined, so they pair
+    with nothing.
 
     Scale shape: per table, a pair survives only if all n_planes signs
     agree, so expected bucket occupancy is |corpus| / 2^n_planes — raise
@@ -275,50 +324,8 @@ def embedding_near_dups(
     # and the final divide replicate the JVM's exact expression shape
     # dot / (sqrt(aa) * sqrt(bb)) — identical IEEE-754 doubles.
     thr = float(threshold)
-
-    def _score_bucket(pdf):
-        import numpy as np
-        import pandas as pd
-
-        empty = pd.DataFrame(
-            {
-                "id_a": pd.Series(dtype="int64"),
-                "id_b": pd.Series(dtype="int64"),
-                "sim": pd.Series(dtype="float64"),
-            }
-        )
-        n = len(pdf)
-        if n < 2:
-            return empty
-        ids = pdf["id"].to_numpy()
-        order = np.argsort(ids, kind="stable")
-        ids = ids[order]
-        q = np.stack(pdf["qv"].to_numpy()[order]).astype(np.float64)
-        norms = np.sqrt(np.einsum("ij,ij->i", q, q))
-        out = []
-        blk = 4096  # bounds the sim tile at blk x B doubles per step
-        for s in range(0, n - 1, blk):
-            e = min(s + blk, n)
-            dots = q[s:e] @ q[s:].T
-            sims = dots / np.outer(norms[s:e], norms[s:])
-            rows, cols = np.nonzero(
-                (sims >= thr)
-                & (np.arange(s, n)[None, :] > np.arange(s, e)[:, None])
-            )
-            if len(rows):
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "id_a": ids[rows + s],
-                            "id_b": ids[cols + s],
-                            "sim": sims[rows, cols],
-                        }
-                    )
-                )
-        return pd.concat(out) if out else empty
-
     scored = blocked.groupBy("bkey").applyInPandas(
-        _score_bucket, "id_a long, id_b long, sim double"
+        lambda pdf: _score_bucket(pdf, thr), "id_a long, id_b long, sim double"
     )
     if n_tables > 1:
         # a pair sharing buckets in several tables appears once per table

@@ -17,7 +17,7 @@ the reference's commit fence (engine.go:103-113).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -30,6 +30,61 @@ def partition_frontiers(events: DataFrame) -> DataFrame:
         F.max("commit_ts").alias("resolved_ts"),
         F.count(F.lit(1)).alias("n_events"),
     )
+
+
+def frontier_and_buckets(
+    events: DataFrame, bucket_col: Column
+) -> tuple[list[tuple[int, int, int]], list[int]]:
+    """The per-source-partition frontier rows ``[(source_partition,
+    resolved_ts, n_events)]`` AND the sorted buckets the events touch, from
+    ONE aggregate job: groupBy(source_partition, bucket) collected and
+    folded on the driver. ``bucket_col`` is the sink's bucket expression —
+    a pure function of the key columns, so the raw events touch exactly the
+    buckets their net rows will.
+
+    An epoch that arrives as one partition is coalesced first
+    (``single_stage``): the aggregate then needs no exchange and runs as
+    one job, where AQE runs each side of an exchange as its own job. A
+    multi-partition batch keeps the exchange, so a large catch-up epoch
+    still aggregates in parallel. Not GROUPING SETS: its Expand node drops
+    the single-partition output, so the coalesced plan would shuffle
+    again."""
+    rows = (
+        single_stage(events).groupBy("source_partition", bucket_col.alias("bucket"))
+        .agg(
+            F.max("commit_ts").alias("resolved_ts"),
+            F.count(F.lit(1)).alias("n_events"),
+        )
+        .collect()
+    )
+    frontiers: dict[int, tuple[int, int]] = {}
+    buckets: set[int] = set()
+    for r in rows:
+        part, rts, n = int(r["source_partition"]), int(r["resolved_ts"]), int(r["n_events"])
+        prev_rts, prev_n = frontiers.get(part, (rts, 0))
+        frontiers[part] = (max(prev_rts, rts), prev_n + n)
+        buckets.add(int(r["bucket"]))
+    return (
+        [(part, rts, n) for part, (rts, n) in sorted(frontiers.items())],
+        sorted(buckets),
+    )
+
+
+def single_stage(df: DataFrame) -> DataFrame:
+    """``df.coalesce(1)`` when ``df``'s physical plan already yields one
+    partition, else ``df`` unchanged. An aggregate over the coalesced frame
+    needs no exchange, so it runs as one stage; a multi-partition frame
+    keeps its parallel shape.
+
+    An adaptive plan, or one with an exchange (also inside a cached
+    relation), settles its partitioning only when it runs, so it counts as
+    many partitions; any other plan only builds its RDD here, without a
+    job."""
+    plan = df._jdf.queryExecution().executedPlan()
+    tree = plan.toString()
+    if "Exchange" in tree or "AdaptiveSparkPlan" in tree:
+        return df
+    return df.coalesce(1) if plan.execute().getNumPartitions() == 1 else df
 
 
 def resolved_ts(events: DataFrame) -> int | None:

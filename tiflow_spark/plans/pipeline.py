@@ -5,9 +5,11 @@ RowChangedEvent → MySQL DMLs → checkpoint advance. Spark rebuild, one
 ``foreachBatch`` body:
 
     raw events
-      → frontier (per-source-partition resolved-ts + counts → lineage)
-      → op_order + LWW reduce to net row per key  [1 shuffle, partial-agg
-        = the salted hot-key split; sorter + DM compactor in one op]
+      → frontier + affected buckets (per-source-partition resolved-ts +
+        counts → lineage; one aggregate job)
+      → op_order + LWW reduce to net row per key  [1 shuffle, none for a
+        one-partition epoch; partial-agg = the salted hot-key split;
+        sorter + DM compactor in one op]
       → versioned payload decode                  [narrow, JVM from_json]
       → CowTable.merge                            [bucket-pruned COW MERGE,
         epoch-fenced, version-conditional → idempotent + out-of-order safe]
@@ -25,7 +27,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 
 from tiflow_spark.functions.decode import decode_payload, decode_payload_pandas
-from tiflow_spark.operators.frontier import partition_frontiers
+from tiflow_spark.operators.frontier import frontier_and_buckets, single_stage
 from tiflow_spark.operators.lww import lww_latest, with_op_order
 from tiflow_spark.sinks.cow_table import CowTable, MergeStats
 from tiflow_spark.sources.registry import SchemaVersion
@@ -50,10 +52,14 @@ def apply_epoch(
 ) -> EpochResult:
     """Process one microbatch of raw change events into the table.
 
-    Action layout (one full pass over the raw events + one over net rows):
-    the frontier aggregate and the LWW reduce both scan the raw batch; the
-    caller (streaming runner) persists the batch so the scan is one read.
-    The merge is told the batch is pre-reduced, so it skips its own LWW.
+    Action layout: two actions (a pending-store drain adds a third, for
+    the store's buckets). The frontier-and-buckets aggregate runs
+    first and yields the lineage, the resolved-ts and the affected buckets;
+    then the merge write reduces, decodes and rewrites those buckets. Both
+    scan the raw batch, which the caller (streaming runner) persists, so
+    the source is read once. The merge is told the batch is pre-reduced and
+    its buckets known, so it runs neither its own LWW nor its own bucket
+    discovery.
 
     ``strict_frontier=True`` enforces the reference's commit fence
     (/root/reference/cdc/processor/sourcemanager/sorter/engine.go:103-113):
@@ -102,50 +108,38 @@ def apply_epoch(
     manifest_extra = dict(manifest_extra or {})
     prev_pending = table.read_pending()
 
-    # frontier + lineage: a SEPARATE tiny job whose scan projects only
-    # (source_partition, commit_ts) — parquet column pruning makes it ~1%
-    # of the main job — overlapped with the LWW job below (guide §2.6):
-    # both only READ the batch, the scheduler back-fills the frontier tasks
-    # into the LWW stage's tail, and the result is joined before the merge
-    # needs it (~0.3s/epoch hidden at 300k-event epochs). Riding the
-    # aggregates on the LWW job as observed metrics saves that job but
-    # measured slower in rounds 1, 4 and 6: 64x2 conditional aggregates per
-    # input row cost more than one column-pruned job.
-    from concurrent.futures import ThreadPoolExecutor
-
-    _frontier_pool = ThreadPoolExecutor(max_workers=1)
-    frontier_fut = _frontier_pool.submit(lambda: partition_frontiers(batch).collect())
-    _frontier_pool.shutdown(wait=False)
+    # frontier + lineage + affected buckets: ONE aggregate job over the
+    # raw batch (operators.frontier.frontier_and_buckets), run before the
+    # reduce on this thread, so its job carries the streaming query's job
+    # group. bucket is a pure function of the key columns, so the raw
+    # events touch exactly the buckets their net rows will.
+    frontier, affected = frontier_and_buckets(batch, table._bucket_col())
+    lineage_rows = [(batch_id, *r) for r in frontier]
+    resolved = min((r[2] for r in lineage_rows), default=None)
 
     if prev_pending is not None:
         # pending events were lineage-counted by the epoch that withheld
-        # them — fold them into the LWW only (the frontier job scans the
-        # NEW events), and clear the reference. An EMPTY microbatch still
-        # drains: the withheld rows merge with zero new lineage rather than
-        # sitting in the store forever.
+        # them — fold them into the LWW only, add their buckets (one extra
+        # job, only on a drain), and clear the reference. An EMPTY
+        # microbatch still drains: the withheld rows merge with zero new
+        # lineage rather than sitting in the store forever.
         dp = prev_pending.drop(
             *[c for c in ("pre_payload", "op_order") if c in prev_pending.columns]
         )
         ev = ev.unionByName(with_op_order(dp), allowMissingColumns=True)
+        pending_buckets = dp.select(table._bucket_col().alias("b")).distinct().collect()
+        affected = sorted(set(affected) | {int(r["b"]) for r in pending_buckets})
         manifest_extra["pending"] = None
 
     # persist the reduced rows BEFORE decoding: projecting from_json onto
     # the aggregate output folds the decode into the aggregate's result
     # expressions (measured ~75x slower); the cache is a plan barrier and
-    # the net rows (one per live key) are the smallest point in the pipeline
-    net = lww_latest(ev).withColumn("bucket", table._bucket_col()).persist()
+    # the net rows (one per live key) are the smallest point in the
+    # pipeline. The merge write is its only consumer and materialises it.
+    # A one-partition epoch reduces without an exchange (single_stage), so
+    # the reduce and the cache fill are one job.
+    net = lww_latest(single_stage(ev)).withColumn("bucket", table._bucket_col()).persist()
     try:
-        # ONE action materializes the cache (whole partitions, a plan
-        # barrier) AND yields the affected buckets; a separate count()
-        # first was a second full job per epoch
-        affected = [int(r["bucket"]) for r in net.select("bucket").distinct().collect()]
-        # joined inside the try: a failed frontier job must not leave net
-        # cached for the rest of a long-lived session
-        lineage_rows = [
-            (batch_id, int(r["source_partition"]), int(r["resolved_ts"]), int(r["n_events"]))
-            for r in frontier_fut.result()
-        ]
-        resolved = min((r[2] for r in lineage_rows), default=None)
         decode = decode_payload_pandas if decoder == "pandas" else decode_payload
         dec = decode(net, registry)
         if capture_net:
@@ -213,10 +207,10 @@ def _apply_epoch_fenced(
     if batch_id <= table.last_committed_batch():
         return EpochResult(stats=MergeStats(batch_id=batch_id, skipped=True), resolved_ts=None)
 
-    lineage_rows = [
-        (batch_id, int(r["source_partition"]), int(r["resolved_ts"]), int(r["n_events"]))
-        for r in partition_frontiers(ev).collect()
-    ]
+    # lineage only: the gates below decide which rows merge, so the
+    # affected buckets are discovered after the split
+    frontier, _ = frontier_and_buckets(ev, table._bucket_col())
+    lineage_rows = [(batch_id, *r) for r in frontier]
     _, resolved = CowTable._advance_frontiers(table.current_manifest(), lineage_rows)
 
     prev_pending = table.read_pending()
@@ -238,9 +232,9 @@ def _apply_epoch_fenced(
     pending_rel = table.write_pending(full.filter(~gate).drop("op_order"), batch_id)
 
     net = lww_latest(full.filter(gate)).withColumn("bucket", table._bucket_col()).persist()
-    # one materializing action (see apply_epoch)
-    affected = [int(r["bucket"]) for r in net.select("bucket").distinct().collect()]
     try:
+        # the gated rows' buckets: one action that also fills the cache
+        affected = [int(r["bucket"]) for r in net.select("bucket").distinct().collect()]
         decode = decode_payload_pandas if decoder == "pandas" else decode_payload
         dec = decode(net, registry)
         extra = {**(manifest_extra or {}), "pending": pending_rel}

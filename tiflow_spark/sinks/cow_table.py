@@ -79,7 +79,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tiflow_spark.operators.lww import lww_latest, with_op_order
-from tiflow_spark.operators.frontier import partition_frontiers
+from tiflow_spark.operators.frontier import frontier_and_buckets
 
 KEY_COLS = ("conv_id", "turn_idx")
 VERSION_COLS = ("__commit_ts", "__start_ts", "__op_order")
@@ -96,6 +96,11 @@ ENVELOPE_COLS = frozenset(
 # Default table shape: conversation transcripts (BASELINE.json input_hint).
 DEFAULT_KEY_SCHEMA = {"conv_id": "string", "turn_idx": "int"}
 DEFAULT_DATA_SCHEMA = {"role": "string", "text": "string", "tool": "string", "ts": "timestamp"}
+
+# The version and tombstone columns every bucket file carries.
+FILE_VERSION_SCHEMA = {
+    "__commit_ts": "LONG", "__start_ts": "LONG", "__op_order": "INT", "__deleted": "BOOLEAN",
+}
 
 LINEAGE_SCHEMA = (
     "batch_id LONG, source_partition INT, resolved_ts LONG, applied_events LONG"
@@ -160,6 +165,11 @@ class CowTable:
                 self.current_manifest().get("data_schema") or DEFAULT_DATA_SCHEMA
             )
         self.key_schema = dict(key_schema) if key_schema is not None else dict(DEFAULT_KEY_SCHEMA)
+        untyped = [c for c in key_cols if c not in self.key_schema]
+        if untyped:
+            # bucket files are read with the table's schema (_file_schema),
+            # so every key column needs a declared type
+            raise ValueError(f"key_schema declares no type for key column(s) {untyped}")
         # column rename history: data column -> older physical names,
         # newest first (set by the runner's schema evolution from the
         # registry's rename chains; persisted in the manifest). Bucket
@@ -208,8 +218,8 @@ class CowTable:
         """Conform ``df`` to the current data schema: absent columns
         backfill NULL (add-column evolution), and a column absent under its
         CURRENT name is reconstructed from its historical names when the
-        frame carries them (rename evolution — a mergeSchema read over
-        pre- and post-rename bucket files yields both names; newest
+        frame carries them (rename evolution — a bucket read carries every
+        historical name, NULL in files written after the rename; newest
         non-null wins)."""
         for c in self.data_cols:
             t = self.data_schema.get(c, "string")
@@ -333,8 +343,10 @@ class CowTable:
             )
         if not paths:
             return None
-        # mergeSchema: bucket files written before a DDL lack later columns
-        return self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        # read with the table's own schema, not the files' footers: a file
+        # written before an ADD COLUMN reads it as NULL, and a column a
+        # DROP removed is not read at all
+        return self.spark.read.schema(self._file_schema()).parquet(*paths)
 
     def _reconcile_by_bucket(self, candidates: DataFrame) -> DataFrame:
         """Per-key newest-version reduce, bucket-local (the COW reconcile).
@@ -400,11 +412,20 @@ class CowTable:
             .select(*self.key_cols, *[F.col(f"_w.{c}").alias(c) for c in val_cols])
         )
 
-    def _empty_schema(self) -> str:
-        fields = [f"{c} {t}" for c, t in self.key_schema.items()]
-        fields += [f"{c} {t}" for c, t in self.data_schema.items()]
-        fields += ["__commit_ts LONG", "__start_ts LONG", "__op_order INT", "__deleted BOOLEAN"]
-        return ", ".join(fields)
+    def _file_schema(self) -> str:
+        """The schema of every bucket file, as a DDL string: the key and
+        data columns, every historical name in ``column_history`` (typed as
+        its current column, so files written before a RENAME still resolve
+        in ``_with_all_data_cols``), the version columns and ``__deleted``.
+        Reads use it instead of inferring from file footers (the manifest
+        is the contract), and ``merge`` casts to it before writing."""
+        fields = {c: self.key_schema[c] for c in self.key_cols}
+        fields.update(self.data_schema)
+        for c, names in self.column_history.items():
+            for n in names:
+                fields.setdefault(n, self.data_schema.get(c, "string"))
+        fields.update(FILE_VERSION_SCHEMA)
+        return ", ".join(f"`{c}` {t}" for c, t in fields.items())
 
     def snapshot(
         self,
@@ -438,13 +459,12 @@ class CowTable:
             all_buckets = [b for b in all_buckets if b in keep]
         df = self._read_buckets(manifest, all_buckets)
         if df is None:
-            df = self.spark.createDataFrame([], self._empty_schema())
+            df = self.spark.createDataFrame([], self._file_schema())
         df = self._with_all_data_cols(df)
         if manifest.get("deltas"):
             # merge-on-read: resolve base+deltas to one row per key
             df = self._resolve(df)
-        # project to the CURRENT schema: bucket files written before a
-        # column DROP still carry it (mergeSchema) — the snapshot must not
+        # the public column order: keys, data, versions, tombstone flag
         df = df.select(
             *self.key_cols, *self.data_cols, *VERSION_COLS, "__deleted"
         )
@@ -472,7 +492,9 @@ class CowTable:
         n_raw_events)] computed on the raw stream in that case, else lineage
         is derived from ``batch`` itself. ``affected_buckets``, when the
         caller already observed them on an earlier pass, skips the
-        discovery job. Equivalent Iceberg statement::
+        discovery; whichever of the two is missing comes from one
+        frontier-and-buckets job over ``batch``. Equivalent Iceberg
+        statement::
 
             MERGE INTO t USING net s
               ON t.conv_id = s.conv_id AND t.turn_idx = s.turn_idx
@@ -507,12 +529,14 @@ class CowTable:
                 "(data_schema_from_registry) or project them out explicitly"
             )
 
-        if lineage_rows is None:
-            frontiers = partition_frontiers(batch).collect()
-            lineage_rows = [
-                (batch_id, int(r["source_partition"]), int(r["resolved_ts"]), int(r["n_events"]))
-                for r in frontiers
-            ]
+        if lineage_rows is None or affected_buckets is None:
+            # one aggregate job over the batch yields whichever of lineage
+            # and buckets the caller did not pass (frontier_and_buckets)
+            frontier, found = frontier_and_buckets(batch, self._bucket_col())
+            if lineage_rows is None:
+                lineage_rows = [(batch_id, *r) for r in frontier]
+            if affected_buckets is None:
+                affected_buckets = found
         new_frontiers, frontier_resolved = self._advance_frontiers(manifest, lineage_rows)
         batch_resolved = resolved_ts if resolved_ts is not None else frontier_resolved
         n_events = int(sum(r[3] for r in lineage_rows))
@@ -573,31 +597,20 @@ class CowTable:
         net = self._with_all_data_cols(with_op_order(batch))
         if not pre_reduced:
             net = lww_latest(net, self.key_cols)
+        # cast to the file schema, so every file matches what reads expect
+        versions = {"commit_ts": "__commit_ts", "start_ts": "__start_ts", "op_order": "__op_order"}
         net = net.select(
-            *self.key_cols,
-            *self.data_cols,
-            F.col("commit_ts").alias("__commit_ts"),
-            F.col("start_ts").alias("__start_ts"),
-            F.col("op_order").alias("__op_order"),
+            *[F.col(c).cast(self.key_schema[c]).alias(c) for c in self.key_cols],
+            *[F.col(c).cast(t).alias(c) for c, t in self.data_schema.items()],
+            *[F.col(c).cast(FILE_VERSION_SCHEMA[v]).alias(v) for c, v in versions.items()],
             (F.col("op") == "D").alias("__deleted"),
         ).withColumn("bucket", self._bucket_col())
 
-        if affected_buckets is None:
-            # the reduced batch is touched by two actions (bucket discovery
-            # + write) — cache it, it is one row per key
-            net = net.persist()
-            affected = sorted(
-                int(r["bucket"]) for r in net.select("bucket").distinct().collect()
-            )
-        else:
-            affected = sorted(set(int(b) for b in affected_buckets))
-
+        affected = sorted(set(int(b) for b in affected_buckets))
         if not affected:
             # empty net batch (e.g. everything filtered upstream while
             # lineage was computed on the raw stream): frontier/lineage
             # still advance, no data write
-            if affected_buckets is None:
-                net.unpersist()
             return commit(dict(manifest["buckets"]), n_events, 0)
 
         if self.mode == "mor":
@@ -612,8 +625,6 @@ class CowTable:
                 .partitionBy("bucket")
                 .parquet(f"{self.root}/{data_rel}")
             )
-            if affected_buckets is None:
-                net.unpersist()
             new_deltas = {
                 k: list(v) for k, v in (manifest.get("deltas") or {}).items()
             }
@@ -632,15 +643,8 @@ class CowTable:
 
         existing = self._read_buckets(manifest, affected)
         if existing is not None:
-            # project to net's exact column set: base files written before a
-            # DROP COLUMN still carry the dropped column (mergeSchema), and
-            # _with_all_data_cols only removes rename-history names — without
-            # this projection the unionByName below throws on the first
-            # post-drop epoch that touches a pre-drop bucket
-            existing = (
-                self._with_all_data_cols(existing)
-                .withColumn("bucket", self._bucket_col())
-                .select(*net.columns)
+            existing = self._with_all_data_cols(existing).withColumn(
+                "bucket", self._bucket_col()
             )
             # bucket-local reconcile: one exchange on bucket, winners leave
             # already bucket-partitioned (see _reconcile_by_bucket — this
@@ -663,8 +667,6 @@ class CowTable:
             .partitionBy("bucket")
             .parquet(out)
         )
-        if affected_buckets is None:
-            net.unpersist()
 
         new_buckets = dict(manifest["buckets"])
         for b in affected:
@@ -767,8 +769,6 @@ class CowTable:
             return 0
         affected = sorted(int(b) for b in deltas)
         df = self._read_buckets(manifest, affected)
-        # canonical projection: a compaction after a DROP COLUMN must not
-        # carry the dropped column back into the new base files
         # NOTE (r6): the bucket-local Arrow resolve used by merge() was
         # measured SLOWER here (compact 2.6-3.5s -> 4.0-4.3s): compaction
         # input is many delta generations per key, where max_by's map-side
@@ -777,7 +777,6 @@ class CowTable:
         # partial-aggregating path deliberately.
         resolved = (
             self._resolve(self._with_all_data_cols(df))
-            .select(*self.key_cols, *self.data_cols, *VERSION_COLS, "__deleted")
             .withColumn("bucket", self._bucket_col())
         )
         data_rel = f"data/c{manifest['seq'] + 1}"
@@ -898,14 +897,11 @@ class CowTable:
         df = self._read_buckets(manifest, all_buckets)
         if df is None:
             return 0
+        df = self._with_all_data_cols(df)
         if manifest.get("deltas"):
             # MOR: resolve first — dropping a delta tombstone while an
             # older base row survives would resurrect the dead row
-            df = self._resolve(self._with_all_data_cols(df))
-        else:
-            df = self._with_all_data_cols(df)
-        # canonical projection (sheds columns dropped by DDL; see compact)
-        df = df.select(*self.key_cols, *self.data_cols, *VERSION_COLS, "__deleted")
+            df = self._resolve(df)
         dead = F.col("__deleted") & (F.col("__commit_ts") < below_resolved_ts)
         df = df.persist()
         try:
