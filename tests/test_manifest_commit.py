@@ -1,7 +1,7 @@
 """The single manifest-commit path (CowTable.commit) and the epoch plan's
 cleanup/ordering guarantees: manifest keys survive every table commit, the
 bucket-local reconcile orders null versions like max_by, and a failed
-frontier job does not leak the cached net rows."""
+frontier job or merge does not leak the cached net rows."""
 
 import pytest
 
@@ -81,19 +81,40 @@ def _failing_frontier(events, bucket_col):
     raise RuntimeError("frontier job failed")
 
 
-def test_failed_frontier_job_unpersists_net(spark, tmp_path, monkeypatch):
-    """A failing frontier-and-buckets job propagates its error, leaves no
-    cached RDD behind and commits nothing."""
-    monkeypatch.setattr(pipeline, "frontier_and_buckets", _failing_frontier)
-    table = CowTable(spark, str(tmp_path / "t"), n_buckets=2)
-    batch = spark.createDataFrame(
+def _epoch_batch(spark):
+    return spark.createDataFrame(
         [("I", 10, 9, "a", 0, 1, '{"role":"u","text":"a"}', None, 0)],
         "op STRING, commit_ts LONG, start_ts LONG, conv_id STRING, turn_idx INT, "
         "schema_version LONG, payload STRING, pre_payload STRING, source_partition INT",
     )
+
+
+def _assert_epoch_fails_clean(spark, table, match):
     jsc = spark.sparkContext._jsc
     before = jsc.getPersistentRDDs().size()
-    with pytest.raises(RuntimeError, match="frontier job failed"):
-        apply_epoch(table, [SchemaVersion(1, 0, PAYLOAD_V1)], batch, 0)
+    with pytest.raises(RuntimeError, match=match):
+        apply_epoch(table, [SchemaVersion(1, 0, PAYLOAD_V1)], _epoch_batch(spark), 0)
     assert jsc.getPersistentRDDs().size() == before
     assert table.last_committed_batch() == -1
+
+
+def test_failed_frontier_job_unpersists_net(spark, tmp_path, monkeypatch):
+    """A failing frontier-and-buckets job, which runs before the net rows
+    are cached, propagates its error, leaves no cached RDD behind and
+    commits nothing."""
+    monkeypatch.setattr(pipeline, "frontier_and_buckets", _failing_frontier)
+    _assert_epoch_fails_clean(spark, CowTable(spark, str(tmp_path / "t"), n_buckets=2),
+                              "frontier job failed")
+
+
+def _failing_commit(self, base, changes):
+    raise RuntimeError("manifest commit failed")
+
+
+def test_failed_merge_unpersists_net(spark, tmp_path, monkeypatch):
+    """A merge that fails after its write has filled the net-row cache (the
+    manifest commit raises) propagates its error; the try/finally around
+    the merge still unpersists the net rows, and nothing is committed."""
+    monkeypatch.setattr(CowTable, "commit", _failing_commit)
+    _assert_epoch_fails_clean(spark, CowTable(spark, str(tmp_path / "t"), n_buckets=2),
+                              "manifest commit failed")

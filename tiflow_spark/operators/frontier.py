@@ -74,17 +74,43 @@ def single_stage(df: DataFrame) -> DataFrame:
     """``df.coalesce(1)`` when ``df``'s physical plan already yields one
     partition, else ``df`` unchanged. An aggregate over the coalesced frame
     needs no exchange, so it runs as one stage; a multi-partition frame
-    keeps its parallel shape.
+    keeps its parallel shape, which measured faster than coalescing it
+    (three-file tail epochs, CHANGES.md).
 
-    An adaptive plan, or one with an exchange (also inside a cached
-    relation), settles its partitioning only when it runs, so it counts as
-    many partitions; any other plan only builds its RDD here, without a
-    job."""
+    The count comes from the plan's RDD, not ``outputPartitioning``: a file
+    scan reports an unknown partitioning whatever its file count. Building
+    that RDD runs no job unless the plan holds an exchange or an adaptive
+    plan (also inside a cached relation); such a plan settles its
+    partitioning only when it runs, so it counts as many partitions."""
     plan = df._jdf.queryExecution().executedPlan()
-    tree = plan.toString()
-    if "Exchange" in tree or "AdaptiveSparkPlan" in tree:
+    if _settles_when_run(df.sparkSession._jvm, plan):
         return df
     return df.coalesce(1) if plan.execute().getNumPartitions() == 1 else df
+
+
+_SETTLES_WHEN_RUN = (
+    "org.apache.spark.sql.execution.exchange.Exchange",
+    "org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec",
+)
+_CACHED_SCAN = "org.apache.spark.sql.execution.columnar.InMemoryTableScanExec"
+
+
+def _settles_when_run(jvm, plan) -> bool:
+    """Whether a node of ``plan``, or of a cached relation's plan under
+    it, is an exchange or an adaptive plan (checked by class)."""
+    loader = plan.getClass().getClassLoader()
+    classes = [jvm.java.lang.Class.forName(n, False, loader) for n in _SETTLES_WHEN_RUN]
+    cached = jvm.java.lang.Class.forName(_CACHED_SCAN, False, loader)
+    nodes = [plan]
+    while nodes:
+        node = nodes.pop()
+        if any(c.isInstance(node) for c in classes):
+            return True
+        if cached.isInstance(node):
+            nodes.append(node.relation().cachedPlan())
+        children = node.children()
+        nodes.extend(children.apply(k) for k in range(children.size()))
+    return False
 
 
 def resolved_ts(events: DataFrame) -> int | None:

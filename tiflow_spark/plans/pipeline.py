@@ -27,7 +27,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 
 from tiflow_spark.functions.decode import decode_payload, decode_payload_pandas
-from tiflow_spark.operators.frontier import frontier_and_buckets, single_stage
+from tiflow_spark.operators.frontier import (
+    frontier_and_buckets, partition_frontiers, single_stage,
+)
 from tiflow_spark.operators.lww import lww_latest, with_op_order
 from tiflow_spark.sinks.cow_table import CowTable, MergeStats
 from tiflow_spark.sources.registry import SchemaVersion
@@ -209,8 +211,10 @@ def _apply_epoch_fenced(
 
     # lineage only: the gates below decide which rows merge, so the
     # affected buckets are discovered after the split
-    frontier, _ = frontier_and_buckets(ev, table._bucket_col())
-    lineage_rows = [(batch_id, *r) for r in frontier]
+    lineage_rows = [
+        (batch_id, int(r["source_partition"]), int(r["resolved_ts"]), int(r["n_events"]))
+        for r in partition_frontiers(single_stage(ev)).collect()
+    ]
     _, resolved = CowTable._advance_frontiers(table.current_manifest(), lineage_rows)
 
     prev_pending = table.read_pending()

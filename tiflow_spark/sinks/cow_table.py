@@ -191,7 +191,9 @@ class CowTable:
         # transform analog, e.g. conv-id div group_size) preserves key
         # locality: a feed whose epochs touch contiguous key ranges then
         # merges only the few buckets those ranges map to — merge cost
-        # follows the epoch's key footprint, not the table size.
+        # follows the epoch's key footprint, not the table size. The
+        # expression sees the key columns as each frame carries them, so it
+        # must yield the same bucket for a key whatever its integer width.
         self.bucket_expr = bucket_expr
         # write strategy:
         # - "cow" (default): each merge reads the affected base buckets,
@@ -319,7 +321,11 @@ class CowTable:
     def _bucket_col(self):
         if self.bucket_expr is not None:
             return F.expr(self.bucket_expr).cast("int")
-        return F.pmod(F.xxhash64(*self.key_cols), F.lit(self.n_buckets)).cast("int")
+        # hash the keys as the files store them: xxhash64 of an INT and of
+        # a LONG differ, so a batch carrying a wider key type would find
+        # other buckets than its (cast) rows are written to
+        keys = [F.col(c).cast(self.key_schema[c]) for c in self.key_cols]
+        return F.pmod(F.xxhash64(*keys), F.lit(self.n_buckets)).cast("int")
 
     def _read_buckets(self, manifest: dict[str, Any], buckets: list[int]) -> DataFrame | None:
         paths = [
