@@ -4,15 +4,19 @@ Reference: the frontier tracks the min over region/span resolved-ts
 (/root/reference/cdc/puller/frontier/frontier.go:75-91); the changefeed
 checkpoint is the min over tables (/root/reference/cdc/owner/changefeed.go:480).
 
-Spark form: per microbatch, resolved_ts = min over source partitions of
+Spark form: per microbatch, each source partition's frontier is its
 max(commit_ts), carried forward per partition across batches in the sink's
-manifest (CowTable._advance_frontiers). Events with commit_ts > resolved_ts
-are *not yet totally ordered* (a straggler partition may still deliver older
+manifest (CowTable._advance_frontiers); the table's resolved_ts is the min
+over every partition ever seen. Events with commit_ts > resolved_ts are
+*not yet totally ordered* (a straggler partition may still deliver older
 ones); by default the sink's conditional-LWW merge makes them safe to apply
 anyway, so the frontier serves the completeness watermark and the
 tombstone-GC bound. With ``apply_epoch(strict_frontier=True)`` it ALSO
 gates: above-watermark events are withheld in the table's pending store —
-the reference's commit fence (engine.go:103-113).
+the reference's commit fence (engine.go:103-113). ``frontier_and_buckets``
+feeds every epoch from one aggregate: the lineage, and per bucket the
+lowest commit_ts, which tells apply_epoch whether any of the bucket's
+events passes the gate.
 """
 
 from __future__ import annotations
@@ -34,13 +38,16 @@ def partition_frontiers(events: DataFrame) -> DataFrame:
 
 def frontier_and_buckets(
     events: DataFrame, bucket_col: Column
-) -> tuple[list[tuple[int, int, int]], list[int]]:
+) -> tuple[list[tuple[int, int, int]], dict[int, int | None]]:
     """The per-source-partition frontier rows ``[(source_partition,
-    resolved_ts, n_events)]`` AND the sorted buckets the events touch, from
-    ONE aggregate job: groupBy(source_partition, bucket) collected and
-    folded on the driver. ``bucket_col`` is the sink's bucket expression —
-    a pure function of the key columns, so the raw events touch exactly the
-    buckets their net rows will.
+    resolved_ts, n_events)]`` AND, per bucket the events touch, the lowest
+    ``commit_ts`` among its events, from ONE aggregate job:
+    groupBy(source_partition, bucket) collected and folded on the driver.
+    ``bucket_col`` is the sink's bucket expression — a pure function of the
+    key columns, so the raw events touch exactly the buckets their net rows
+    will. An event whose ``bucket_col`` is null counts in the frontier but
+    touches no bucket: a caller masks the bucket of events a gate withholds
+    whatever the watermark (apply_epoch's version gate).
 
     An epoch that arrives as one partition is coalesced first
     (``single_stage``): the aggregate then needs no exchange and runs as
@@ -54,19 +61,24 @@ def frontier_and_buckets(
         .agg(
             F.max("commit_ts").alias("resolved_ts"),
             F.count(F.lit(1)).alias("n_events"),
+            F.min("commit_ts").alias("lowest_ts"),
         )
         .collect()
     )
     frontiers: dict[int, tuple[int, int]] = {}
-    buckets: set[int] = set()
+    lowest: dict[int, int | None] = {}
     for r in rows:
         part, rts, n = int(r["source_partition"]), int(r["resolved_ts"]), int(r["n_events"])
         prev_rts, prev_n = frontiers.get(part, (rts, 0))
         frontiers[part] = (max(prev_rts, rts), prev_n + n)
-        buckets.add(int(r["bucket"]))
+        if r["bucket"] is not None:
+            b, lo = int(r["bucket"]), r["lowest_ts"]
+            lowest[b] = min(
+                (x for x in (lowest.get(b), lo) if x is not None), default=None
+            )
     return (
         [(part, rts, n) for part, (rts, n) in sorted(frontiers.items())],
-        sorted(buckets),
+        lowest,
     )
 
 

@@ -117,6 +117,7 @@ class MergeStats:
     skipped: bool
     applied_events: int = 0
     affected_buckets: int = 0
+    # the table watermark this commit records (the manifest's resolved_ts)
     resolved_ts: int | None = None
 
 
@@ -484,7 +485,6 @@ class CowTable:
         self,
         batch: DataFrame,
         batch_id: int,
-        resolved_ts: int | None = None,
         lineage_rows: list[tuple[int, int, int, int]] | None = None,
         pre_reduced: bool = False,
         affected_buckets: list[int] | None = None,
@@ -542,9 +542,8 @@ class CowTable:
             if lineage_rows is None:
                 lineage_rows = [(batch_id, *r) for r in frontier]
             if affected_buckets is None:
-                affected_buckets = found
+                affected_buckets = sorted(found)
         new_frontiers, frontier_resolved = self._advance_frontiers(manifest, lineage_rows)
-        batch_resolved = resolved_ts if resolved_ts is not None else frontier_resolved
         n_events = int(sum(r[3] for r in lineage_rows))
 
         def commit(
@@ -586,7 +585,7 @@ class CowTable:
                 skipped=False,
                 applied_events=applied,
                 affected_buckets=n_affected,
-                resolved_ts=batch_resolved,
+                resolved_ts=frontier_resolved,
             )
 
         if not lineage_rows and not affected_buckets:
@@ -802,23 +801,24 @@ class CowTable:
             self.vacuum(keep_manifests=self.auto_vacuum_keep)
         return len(affected)
 
-    # ---------------- pending store (strict-frontier mode) ----------------
+    # ---------------- pending store (gated epochs) ----------------
 
     def read_pending(self) -> DataFrame | None:
-        """Events withheld above the watermark by a strict-frontier epoch
-        (plans/pipeline.py apply_epoch(strict_frontier=True)). The manifest
-        references the current pending generation; each strict epoch rewrites
-        it in full (it holds at most one frontier-lag's worth of events)."""
+        """Events a gated epoch withheld (plans/pipeline.py apply_epoch with
+        ``strict_frontier`` or a ``version_gate``). The manifest references
+        the current pending generation; each gated epoch rewrites it in full
+        (it holds at most one gate-lag's worth of events)."""
         rel = self.current_manifest().get("pending")
         if not rel or not os.path.exists(f"{self.root}/{rel}"):
             return None
         return self.spark.read.parquet(f"{self.root}/{rel}")
 
-    def write_pending(self, df: DataFrame, batch_id: int) -> str | None:
+    def write_pending(self, df: DataFrame, batch_id: int) -> str:
         """Persist the new pending generation BEFORE the manifest commit that
         references it (a crash in between leaves an orphan dir the next
-        vacuum removes). Returns the manifest-relative path, or None if df
-        is empty (checked by the write itself, not an extra count)."""
+        vacuum removes). Returns the manifest-relative path, also for an
+        empty ``df``: the write runs no count, and an empty generation is a
+        valid reference."""
         rel = f"pending/b{batch_id}"
         df.write.mode("overwrite").parquet(f"{self.root}/{rel}")
         # parquet always writes a _SUCCESS + footer even for 0 rows; an

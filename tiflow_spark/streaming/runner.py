@@ -8,7 +8,7 @@ processor.go:497). Spark rebuild: ONE streaming query —
     spark.readStream (file source over the change-event log;
                       maxFilesPerTrigger = backpressure quota analog,
                       /root/reference/pkg/config/server_config.go:48)
-      .foreachBatch(apply_epoch)        # plans/pipeline.py
+      .foreachBatch(_process_batch)     # → plans/pipeline.apply_epoch
       .option("checkpointLocation", …)  # source-offset checkpoint (etcd analog)
       .trigger(AvailableNow | processingTime)
 
@@ -387,156 +387,140 @@ class Changefeed:
             keep = keep & keep_predicate(r)
         return aug.filter(keep).select(*batch.columns)
 
+    def _targets(
+        self, batch: DataFrame
+    ) -> list[tuple[str, CowTable | None, list[SchemaVersion], DataFrame]]:
+        """``(name, table, registry, rows)`` per sink target: a single-table
+        feed has one, ``config_table``, taking the whole batch (the reference
+        drives every table span through one table_sink_worker)."""
+        if self.tables is None:
+            return [(self.config_table, self.table, self._current_registry(), batch)]
+        return [
+            (name, tbl, reg, batch.filter(F.col(self.table_col) == name))
+            for name, (tbl, reg) in sorted(self.tables.items())
+        ]
+
+    def _set_registry(self, name: str, registry: list[SchemaVersion]) -> None:
+        """Keep a target's post-DDL registry for the next epoch (a
+        ``registry_path`` feed reloads its persisted registry instead)."""
+        if self.tables is not None:
+            self.tables[name] = (self.tables[name][0], registry)
+        elif self.registry_path is None:
+            self.registry = registry
+
+    def _route(self, batch: DataFrame) -> tuple[DataFrame, list | None]:
+        """The multi-table prelude: table filter, binlog filter, online DDL
+        and shard-merge routing. Returns (batch, per-(target, shard) max
+        schema_version rows for the sharding-DDL barrier, or None). A
+        single-table feed has no prelude."""
+        if self.tables is None:
+            return batch, None
+        if self.config is not None:
+            # upstream (pre-route) names, DM block-allow semantics;
+            # TableFilter.apply resolves driver-side over the small distinct
+            # table set (no-op for a match-all filter). DDL rows of an
+            # excluded table drop with it.
+            batch = self.config.table_filter.apply(batch, col=self.table_col)
+        binlog_rules = (
+            getattr(self.config, "binlog_rules", ())
+            if self.config is not None else ()
+        )
+        if binlog_rules:
+            # DM's ordered Do/Ignore ladder runs on UPSTREAM table names,
+            # before shard-merge routing (dm/syncer: binlog filter precedes
+            # the router)
+            from tiflow_spark.operators.filters import apply_binlog_filter
+
+            batch = apply_binlog_filter(batch, binlog_rules, table_col=self.table_col)
+        if self.online_ddl:
+            from tiflow_spark.operators.filters import apply_online_ddl
+
+            batch = apply_online_ddl(batch, table_col=self.table_col)
+        if not self.route_rules:
+            return batch, None
+        from tiflow_spark.operators.filters import route_tables
+
+        # remember the pre-route (shard) name — the sharding-DDL barrier
+        # tracks each shard's delivered schema_version
+        batch = batch.withColumn("__shard", F.col(self.table_col))
+        batch = route_tables(batch, self.route_rules, self.table_col)
+        if not self.shard_ddl_barrier:
+            return batch, None
+        # one tiny agg over the persisted batch: per (target, shard) max
+        # delivered version (DDL rows included — a shard "executes" the DDL
+        # when its event arrives)
+        vers_src = batch
+        if self.dead_letter:
+            # quarantine-bound rows must NOT advance the barrier: an
+            # unregistered (corrupt) version on one shard would permanently
+            # poison its monotone frontier and admit the other shards'
+            # post-DDL rows without lockstep. Versions a DML can
+            # legitimately carry are the registered ones; a version new THIS
+            # batch reaches the maxima through its op='DDL' row instead.
+            known_all = sorted({
+                v.schema_version
+                for _t, _reg in self.tables.values()
+                for v in _reg
+            })
+            vers_src = batch.filter(
+                (F.col("op") == "DDL")
+                | F.col("schema_version").isin(known_all)
+            )
+        shard_maxima = (
+            vers_src.groupBy(self.table_col, "__shard")
+            .agg(F.max("schema_version").alias("v"))
+            .collect()
+        )
+        return batch, shard_maxima
+
     def _process_batch(self, batch: DataFrame, batch_id: int) -> None:
         batch = batch.persist()
         try:
-            if self.tables is None:
+            batch, shard_maxima = self._route(batch)
+            targets = self._targets(batch)
+            any_applied = False
+            for name, tbl, reg, sub in targets:
                 cfg_rules = (
-                    self.config.rules_for(self.config_table)
-                    if self.config is not None else []
+                    self.config.rules_for(name) if self.config is not None else []
                 )
                 if cfg_rules:
-                    batch = self._filter_raw(batch, cfg_rules)
-                registry = self._current_registry()
+                    sub = self._filter_raw(sub, cfg_rules)
                 if self.ddl_in_stream:
-                    registry, batch_dml = self._apply_ddls(
-                        batch, registry, strict=not self.dead_letter
-                    )
-                    if self.registry_path is None:
-                        self.registry = registry
-                else:
-                    batch_dml = batch
-                dlq_extra = None
+                    # per-table DDL barrier: register this table's DDLs
+                    # against ITS registry, then drop the DDL rows so
+                    # they never reach the LWW as null-key rows
+                    reg, sub = self._apply_ddls(sub, reg, strict=not self.dead_letter)
+                    self._set_registry(name, reg)
+                self._evolve_sink_schema(tbl, reg)
+                version_gate, extra = self._shard_barrier(name, tbl, shard_maxima)
                 if self.dead_letter:
-                    batch_dml, dlq_extra = self._dead_letter_split(
-                        batch_dml, registry, self.table, int(batch_id)
-                    )
+                    sub, dlq_extra = self._dead_letter_split(sub, reg, tbl, int(batch_id))
+                    if dlq_extra is not None:
+                        extra = {**(extra or {}), **dlq_extra}
                 if cfg_rules:
-                    batch_dml = self._filter_value_exprs(
-                        batch_dml, registry, cfg_rules
-                    )
-                self._evolve_sink_schema(self.table, registry)
+                    sub = self._filter_value_exprs(sub, reg, cfg_rules)
                 res = apply_epoch(
-                    self.table, registry, batch_dml, int(batch_id),
-                    decoder=self.decoder, strict_frontier=self.strict_frontier,
+                    tbl, reg, sub, int(batch_id), decoder=self.decoder,
+                    strict_frontier=self.strict_frontier,
+                    version_gate=version_gate, manifest_extra=extra,
                     capture_net=self.validate_every > 0,
-                    manifest_extra=dlq_extra,
                 )
-                self.batch_log.append((int(batch_id), res.stats))
-                if self.validate_every > 0 and not res.stats.skipped:
-                    self._batches_since_validation += 1
-                    if self._batches_since_validation >= self.validate_every:
-                        self._batches_since_validation = 0
-                        self.validate_now()
-            else:
-                if self.config is not None:
-                    # upstream (pre-route) names, DM block-allow semantics;
-                    # TableFilter.apply resolves driver-side over the small
-                    # distinct table set (no-op for a match-all filter).
-                    # DDL rows of an excluded table drop with it.
-                    batch = self.config.table_filter.apply(
-                        batch, col=self.table_col
-                    )
-                binlog_rules = (
-                    getattr(self.config, "binlog_rules", ())
-                    if self.config is not None else ()
+                self.batch_log.append(
+                    (int(batch_id), res.stats) if self.tables is None
+                    else (int(batch_id), name, res.stats)
                 )
-                if binlog_rules:
-                    # DM's ordered Do/Ignore ladder runs on UPSTREAM table
-                    # names, before shard-merge routing (dm/syncer: binlog
-                    # filter precedes the router)
-                    from tiflow_spark.operators.filters import (
-                        apply_binlog_filter,
-                    )
-
-                    batch = apply_binlog_filter(
-                        batch, binlog_rules, table_col=self.table_col
-                    )
-                if self.online_ddl:
-                    from tiflow_spark.operators.filters import apply_online_ddl
-
-                    batch = apply_online_ddl(batch, table_col=self.table_col)
-                shard_maxima = None
-                if self.route_rules:
-                    from tiflow_spark.operators.filters import route_tables
-
-                    # remember the pre-route (shard) name — the sharding-DDL
-                    # barrier tracks each shard's delivered schema_version
-                    batch = batch.withColumn("__shard", F.col(self.table_col))
-                    batch = route_tables(batch, self.route_rules, self.table_col)
-                    if self.shard_ddl_barrier:
-                        # one tiny agg over the persisted batch: per (target,
-                        # shard) max delivered version (DDL rows included —
-                        # a shard "executes" the DDL when its event arrives)
-                        vers_src = batch
-                        if self.dead_letter:
-                            # quarantine-bound rows must NOT advance the
-                            # barrier: an unregistered (corrupt) version on
-                            # one shard would permanently poison its
-                            # monotone frontier and admit the other shards'
-                            # post-DDL rows without lockstep. Versions a
-                            # DML can legitimately carry are the registered
-                            # ones; a version new THIS batch reaches the
-                            # maxima through its op='DDL' row instead.
-                            known_all = sorted({
-                                v.schema_version
-                                for _t, _reg in self.tables.values()
-                                for v in _reg
-                            })
-                            vers_src = batch.filter(
-                                (F.col("op") == "DDL")
-                                | F.col("schema_version").isin(known_all)
-                            )
-                        shard_maxima = (
-                            vers_src.groupBy(self.table_col, "__shard")
-                            .agg(F.max("schema_version").alias("v"))
-                            .collect()
+                any_applied = any_applied or not res.stats.skipped
+            if self.validate_every > 0 and any_applied:
+                # one validation cadence for the whole feed; each target
+                # validates against its own captured nets (the reference
+                # DM validator covers every replicated table)
+                self._batches_since_validation += 1
+                if self._batches_since_validation >= self.validate_every:
+                    self._batches_since_validation = 0
+                    for name, *_ in targets:
+                        self.validate_now(
+                            table_name=None if self.tables is None else name
                         )
-                any_applied = False
-                for name in sorted(self.tables):
-                    tbl, reg = self.tables[name]
-                    sub = batch.filter(F.col(self.table_col) == name)
-                    cfg_rules = (
-                        self.config.rules_for(name)
-                        if self.config is not None else []
-                    )
-                    if cfg_rules:
-                        sub = self._filter_raw(sub, cfg_rules)
-                    if self.ddl_in_stream:
-                        # per-table DDL barrier: register this table's DDLs
-                        # against ITS registry, then drop the DDL rows so
-                        # they never reach the LWW as null-key rows
-                        reg, sub = self._apply_ddls(
-                            sub, reg, strict=not self.dead_letter
-                        )
-                        self.tables[name] = (tbl, reg)
-                    self._evolve_sink_schema(tbl, reg)
-                    version_gate, extra = self._shard_barrier(name, tbl, shard_maxima)
-                    if self.dead_letter:
-                        sub, dlq_extra = self._dead_letter_split(
-                            sub, reg, tbl, int(batch_id)
-                        )
-                        if dlq_extra is not None:
-                            extra = {**(extra or {}), **dlq_extra}
-                    if cfg_rules:
-                        sub = self._filter_value_exprs(sub, reg, cfg_rules)
-                    res = apply_epoch(
-                        tbl, reg, sub, int(batch_id), decoder=self.decoder,
-                        strict_frontier=self.strict_frontier,
-                        version_gate=version_gate, manifest_extra=extra,
-                        capture_net=self.validate_every > 0,
-                    )
-                    self.batch_log.append((int(batch_id), name, res.stats))
-                    any_applied = any_applied or not res.stats.skipped
-                if self.validate_every > 0 and any_applied:
-                    # one validation cadence for the whole feed; each target
-                    # validates against its own captured nets (the reference
-                    # DM validator covers every replicated table)
-                    self._batches_since_validation += 1
-                    if self._batches_since_validation >= self.validate_every:
-                        self._batches_since_validation = 0
-                        for name in sorted(self.tables):
-                            self.validate_now(table_name=name)
         finally:
             batch.unpersist()
 
@@ -1020,9 +1004,14 @@ class Changefeed:
         """Drain everything currently in the log, then stop (the batch-replay
         mode; Trigger.AvailableNow still honors maxFilesPerTrigger per
         microbatch, so epochs stay bounded)."""
+        self._drain(self._process_batch, timeout_sec)
+
+    def _drain(self, body, timeout_sec: int) -> None:
+        """Run ``body`` as the foreachBatch of an AvailableNow query over the
+        log and wait for it to finish."""
         q = (
             self._stream()
-            .writeStream.foreachBatch(self._process_batch)
+            .writeStream.foreachBatch(body)
             .option("checkpointLocation", self.checkpoint_dir)
             .trigger(availableNow=True)
             .start()
@@ -1070,7 +1059,7 @@ class Changefeed:
         a single-topic consumer stays complete. ``dispatch_columns`` feeds
         the "columns" partition dispatcher (columns.go:45-87)."""
         from tiflow_spark.functions.decode import decode_payload
-        from tiflow_spark.operators.frontier import partition_frontiers
+        from tiflow_spark.operators.frontier import resolved_ts
         from tiflow_spark.sinks.mq import (
             bootstrap_messages,
             ddl_messages,
@@ -1112,62 +1101,37 @@ class Changefeed:
         def emit(batch: DataFrame, batch_id: int) -> None:
             batch = batch.persist()
             try:
+                # per-target registry decode; a multi-table feed's rows
+                # route to their table's topic
                 frames: list[DataFrame] = []
-                if self.tables is None:
-                    registry = self._current_registry()
+                sent = []  # (topic, registry, rows) per target
+                for name, _tbl, reg, sub in self._targets(batch):
                     if self.ddl_in_stream:
-                        registry, batch_dml = self._apply_ddls(batch, registry)
-                        if self.registry_path is None:
-                            self.registry = registry
+                        reg, sub_dml = self._apply_ddls(sub, reg)
+                        self._set_registry(name, reg)
                     else:
-                        batch_dml = batch
-                    kw = _table_mq_kwargs(self.config_table)
-                    eff_topic = kw.pop("topic_expr")
-                    topic_table = (
-                        self.config_table if config is not None else "default"
-                    )
-                    topics: list[str | None] = (
-                        [resolve_topic(eff_topic, topic_table, schema_name)]
-                        if eff_topic is not None else [None]
-                    )
-                    frame = encode_for_mq(
-                        decode_payload(batch_dml, registry),
-                        n_partitions=n_partitions,
-                        **kw,
-                    )
-                    if topics != [None]:
-                        frame = frame.withColumn("topic", F.lit(topics[0]))
+                        sub_dml = sub.filter(F.col("op") != "DDL")
+                    kw = _table_mq_kwargs(name)
+                    decoded = decode_payload(sub_dml, reg)
+                    if self.tables is None:
+                        eff_topic = kw.pop("topic_expr")
+                        topic_table = name if config is not None else "default"
+                        topic = (
+                            resolve_topic(eff_topic, topic_table, schema_name)
+                            if eff_topic is not None else None
+                        )
+                        frame = encode_for_mq(decoded, n_partitions=n_partitions, **kw)
+                        if topic is not None:
+                            frame = frame.withColumn("topic", F.lit(topic))
+                    else:
+                        frame = encode_for_mq(
+                            decoded, n_partitions=n_partitions,
+                            table_col=self.table_col, schema_name=schema_name, **kw,
+                        )
+                        topic = resolve_topic(kw["topic_expr"], name, schema_name)
                     frames.append(frame)
-                    registries = [registry]
-                    ddl_src = [(batch, topics[0])]
-                else:
-                    # per-table registry decode; rows route to their topic
-                    topics = []
-                    registries = []
-                    ddl_src = []
-                    for name in sorted(self.tables):
-                        tbl, reg = self.tables[name]
-                        sub = batch.filter(F.col(self.table_col) == name)
-                        if self.ddl_in_stream:
-                            reg, sub_dml = self._apply_ddls(sub, reg)
-                            self.tables[name] = (tbl, reg)
-                        else:
-                            sub_dml = sub.filter(F.col("op") != "DDL")
-                        kw = _table_mq_kwargs(name)
-                        frames.append(
-                            encode_for_mq(
-                                decode_payload(sub_dml, reg),
-                                n_partitions=n_partitions,
-                                table_col=self.table_col,
-                                schema_name=schema_name,
-                                **kw,
-                            )
-                        )
-                        topics.append(
-                            resolve_topic(kw["topic_expr"], name, schema_name)
-                        )
-                        registries.append(reg)
-                        ddl_src.append((sub, topics[-1]))
+                    sent.append((topic, reg, sub))
+                topics = [topic for topic, _reg, _sub in sent]
                 frame = frames[0]
                 for f in frames[1:]:
                     frame = frame.unionByName(f)
@@ -1175,12 +1139,7 @@ class Changefeed:
                 # to every topic × partition (reference mq sink resolved-ts
                 # flush); DDL rows broadcast likewise (MQ DDL sink) so
                 # consumers keep schema lockstep
-                dml = batch.filter(F.col("op") != "DDL")
-                fr = (
-                    partition_frontiers(dml)
-                    .agg(F.min("resolved_ts"))
-                    .first()[0]
-                )
+                fr = resolved_ts(batch.filter(F.col("op") != "DDL"))
                 if fr is not None:
                     frame = frame.unionByName(
                         _broadcast_topics(
@@ -1190,15 +1149,15 @@ class Changefeed:
                         allowMissingColumns=False,
                     )
                 if self.ddl_in_stream:
-                    for src, topic in ddl_src:
+                    for topic, _reg, sub in sent:
                         ddls = ddl_messages(
-                            src.filter(F.col("op") == "DDL"), n_partitions
+                            sub.filter(F.col("op") == "DDL"), n_partitions
                         )
                         frame = frame.unionByName(
                             _broadcast_topics(ddls, [topic])
                         )
                 if bootstrap_interval > 0 and batch_id % bootstrap_interval == 0:
-                    for reg, topic in zip(registries, topics):
+                    for topic, reg, _sub in sent:
                         frame = frame.unionByName(
                             _broadcast_topics(
                                 bootstrap_messages(self.spark, reg, n_partitions),
@@ -1215,19 +1174,7 @@ class Changefeed:
             finally:
                 batch.unpersist()
 
-        q = (
-            self._stream()
-            .writeStream.foreachBatch(emit)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_sec)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError("mq changefeed did not drain within timeout")
-        if q.exception() is not None:
-            raise q.exception()
+        self._drain(emit, timeout_sec)
 
     def run_continuous(self, processing_time: str = "1 second"):
         """Long-lived changefeed — the reference's only mode: keep tailing
